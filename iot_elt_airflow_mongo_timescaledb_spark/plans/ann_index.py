@@ -574,7 +574,9 @@ class IncrementalANNSync:
             # two-step so its Observation never meets merge's
             # isEmpty/limit probes.  Exactly-once: the `cur <=
             # applied` guard above skips replays before any write;
-            # the watermark rides this commit atomically.
+            # the watermark rides this commit atomically — also when
+            # the change set nets to nothing touching the index (the
+            # merge then commits the cursor alone).
             verb = (
                 self.wh.fmt.merge_mor
                 if mor and hasattr(self.wh.fmt, "merge_mor")
@@ -585,15 +587,6 @@ class IncrementalANNSync:
                 delete_keys=changed_keys, record_cdc=False,
                 txn_update={self._APP_ID: int(cur)},
             )
-            # a change set that nets to NOTHING touching the index
-            # (keys inserted+deleted within the range, never indexed)
-            # makes the merge a no-op with no commit — advance the
-            # cursor metadata-only so the next sync reads a fresh
-            # delta instead of re-netting this one forever
-            if self._applied_batch_id() != int(cur):
-                self.wh.fmt.set_txn(
-                    self.assign_table, {self._APP_ID: int(cur)}
-                )
             maybe_compact = getattr(self.wh.fmt, "maybe_compact", None)
             if maybe_compact is not None:
                 maybe_compact(self.assign_table)

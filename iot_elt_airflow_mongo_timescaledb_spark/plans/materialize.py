@@ -316,6 +316,7 @@ class Warehouse:
         unique_key: str,
         delete_keys: DataFrame | None = None,
         record_cdc: bool = True,
+        txn_update: dict | None = None,
     ) -> DataFrame:
         """Reference: ``unique_key='user_id'`` on stage users — incoming
         rows replace target rows with the same key.  On Delta/Iceberg
@@ -343,13 +344,21 @@ class Warehouse:
         micro-batch against a key-clustered 100 TB raw table rewrites
         ~the files its keys live in, never the table) and record merge
         CDC rows for the change feed.
+
+        ``txn_update`` (commit-log formats only) commits writer
+        cursors inside the merge's own commit — see
+        ``ManifestFormat.merge``; the rollup family's exactly-once
+        cursor rides it.
         """
         # record_cdc=False: INTERNAL state tables (rollup/index
         # assignments) opt their own upserts out of change-data capture
         # even on a cdf=True warehouse — nobody tails derived state,
         # and the classification + landing would double every sync's
         # merge cost (round-11 soak finding)
-        self.fmt.merge(name, df, unique_key, delete_keys, record_cdc=record_cdc)
+        kw = {"txn_update": txn_update} if txn_update else {}
+        self.fmt.merge(
+            name, df, unique_key, delete_keys, record_cdc=record_cdc, **kw
+        )
         # bounded merges append one fresh dir per batch (like appends);
         # the threshold compaction keeps read amplification flat over
         # unbounded 15-minute syncs — cost O(threshold x file), never

@@ -31,7 +31,8 @@ machinery (``plans/pipeline.py:IncrementalAggSync``):
 
 State storage: ``<name>__mvstate`` — a real warehouse table holding
 the rollup's internal columns (``sum_*``/``nn_*``/``n_rows`` +
-``__agg_key`` + the exactly-once batch-id sentinel).  The mv NAME is
+``__agg_key``), with the exactly-once batch-id cursor in its commit
+(see ``_RollupSyncBase``).  The mv NAME is
 never a table, so DML statements that target it refuse loudly.
 
 Anything outside the grammar refuses naming the canonical form —

@@ -252,7 +252,7 @@ class HealthPipeline:
         if self.steps_rollup is not None and coll == "steps":
             # BEFORE the cursor commit: a crash between rollup merge and
             # commit retries the whole batch, and the rollup's batch-id
-            # sentinel makes the re-merge a no-op (see _sync_steps_rollup)
+            # cursor makes the re-merge a no-op (see _sync_steps_rollup)
             self._sync_steps_rollup(tables, lv)
         cursor.commit(fresh)
         return fresh.count() if want_count else None
@@ -265,8 +265,8 @@ class HealthPipeline:
         Disjointness: the cursor's ``>=`` re-reads boundary docs; the
         strict ``> lv`` filter here excludes them (already merged by the
         previous sync).  Exactly-once across sync RETRIES: the batch's
-        max raw ``created_at`` is a monotone batch id committed inside
-        the same atomic swap as the merged data — a retried batch
+        max raw ``created_at`` is a monotone batch id committed
+        atomically with the merged data — a retried batch
         re-delivering the SAME rows carries the same id and no-ops.  A
         retry is NOT guaranteed byte-identical, though: a crash between
         the rollup merge and the cursor commit re-extracts the batch,
@@ -617,41 +617,52 @@ def agg_group_key(group_cols: list[str]):
     return row_fingerprint(group_cols)
 
 
-# (warehouse_root, table) -> (state_fingerprint, (applied, watermark)).
-# Entries are only served while the state table's commit version still
-# equals the fingerprint (checked per call, driver metadata, zero
-# jobs) — see _RollupSyncBase._meta_state.  Caches a 2-tuple of
-# scalars per table, never rows.
-_META_FP_CACHE: dict[tuple, tuple] = {}
-_META_FP_CACHE_CAP = 4096
-
-
 class _RollupSyncBase:
     """Shared machinery for incremental rollup maintenance: a stored
     per-group state table that fact batches MERGE into — never a
     recompute from history.  Subclasses define what the per-group state
     is (additive sums, HLL sketches, ...) via ``_partial`` and
     ``_merge_metric``; this base owns the storage key, the
-    exactly-once batch-id sentinel, and the one-write upsert.
+    exactly-once cursor, and the one-write upsert.
 
     Caller contract: batches must be DISJOINT fact sets (each event
     delivered exactly once — the streaming checkpoint or the
     strict-``>`` watermark upstream provides this).  For callers that
     can only offer at-least-once delivery with a monotonically
     increasing batch id (Structured Streaming's ``foreachBatch``), pass
-    ``batch_id`` to ``sync``: the id is committed INSIDE the same
-    atomic table swap as the merged data (a ``__meta__`` sentinel row),
-    so a replayed batch is detected and skipped — exactly-once effect
-    on plain parquet.
+    ``batch_id`` to ``sync``: a replayed batch is detected and skipped.
 
-    Storage-format note: the group key is md5 over length-prefixed
-    NULL-encoded components (v2, round-5 review).  A rollup table
-    written by the earlier ``concat_ws`` key format cannot be merged
-    into — its keys match nothing — and must be rebuilt from facts
-    once; there is no silent migration.
+    Exactly-once cursor: the applied batch id and the materialized
+    watermark commit in the SAME atomic write as the merged state (the
+    Structured Streaming design: the epoch id commits with an
+    idempotent sink).  Each format holds them one way:
+
+    - commit-log formats (``ManifestFormat``, ``CatalogManifestFormat``):
+      two keys of the state table's manifest ``txn`` map
+      (``_TXN_BATCH_ID``, ``_TXN_WATERMARK``), written by the merge's
+      own commit (``txn_update``), as the ANN index and
+      ``write_streaming_batch`` do.  Reading them parses the head
+      manifest: zero Spark jobs and no cache, so every writer's commit
+      is visible to the next read.  Threshold compaction carries the
+      map; a full-table replace resets it (the replace contract).
+    - ``ParquetFormat`` (no commit log): a ``__meta__`` sentinel row in
+      the same staging swap as the data; reading it costs one job.
+
+    Storage-format notes.  Neither change below has a silent
+    migration: rebuild the rollup from facts once.
+
+    - The group key is md5 over length-prefixed NULL-encoded components
+      (v2, round-5 review).  A rollup table written by the earlier
+      ``concat_ws`` key format cannot be merged into — its keys match
+      nothing.
+    - A manifest-backed state table written while the cursor was still
+      a ``__meta__`` row has no ``txn`` cursor, so it reads as never
+      synced.
     """
 
     _META_KEY = "__meta__"
+    _TXN_BATCH_ID = "rollup.batch_id"
+    _TXN_WATERMARK = "rollup.watermark"
 
     def __init__(
         self,
@@ -670,10 +681,6 @@ class _RollupSyncBase:
         self.group_cols = list(group_cols)
         self.watermark_col = watermark_col
         self._metrics: list[str] = []  # set by subclass __init__
-        #: (applied, watermark) committed by the LAST ``sync`` call of
-        #: THIS instance that wrote a meta row — read-your-writes for
-        #: the streaming path's carried-meta fast path (r16)
-        self._committed_meta: tuple | None = None
 
     def _key(self):
         return agg_group_key(self.group_cols)
@@ -688,39 +695,16 @@ class _RollupSyncBase:
         raise NotImplementedError
 
     def _meta_state(self):
-        """``(applied_batch_id, stored_watermark)`` in ONE bounded job.
-
-        The cursor and the materialized watermark live on the same
-        ``__meta__`` sentinel row; fetching them separately cost two
-        read+filter+first jobs per sync (r15 optimization round).
-
-        Process-wide fingerprint-guarded memo (r16): on manifest-backed
-        state tables the pair is cached under the table's COMMIT
-        VERSION — a zero-job driver-metadata check.  Any committed
-        change (ours or a foreign writer's) mints a new version, so a
-        hit can only serve the meta of the exact committed state
-        currently at the head; misses read exactly as before.  Plain
-        staging-swap tables are excluded (their mtime fingerprints are
-        coarser than a commit), keeping their reads fresh."""
+        """``(applied_batch_id, stored_watermark)``: the head manifest's
+        ``txn`` keys on commit-log formats (zero jobs), else the
+        ``__meta__`` row in one bounded job (see the class docstring)."""
         from pyspark.sql import functions as F
 
-        fp = self._state_fingerprint()
-        cache_key = (self.wh.root, self.table_name)
-        if fp is not None and fp[0] == "v":
-            hit = _META_FP_CACHE.get(cache_key)
-            if hit is not None and hit[0] == fp:
-                return hit[1]
-        meta = self._meta_state_read()
-        if fp is not None and fp[0] == "v":
-            if len(_META_FP_CACHE) >= _META_FP_CACHE_CAP:
-                _META_FP_CACHE.pop(next(iter(_META_FP_CACHE)))
-            _META_FP_CACHE[cache_key] = (fp, meta)
-        return meta
-
-    def _meta_state_read(self):
-        """The uncached read behind :meth:`_meta_state`."""
-        from pyspark.sql import functions as F
-
+        man = getattr(self.wh.fmt, "_manifest", None)
+        if man is not None:
+            m = man(self.table_name, resolve=False, expand_lists=False)
+            txn = (m or {}).get("txn") or {}
+            return txn.get(self._TXN_BATCH_ID), txn.get(self._TXN_WATERMARK)
         if not self.wh.exists(self.table_name):
             return None, None
         stored = self.wh.read(self.table_name)
@@ -751,43 +735,14 @@ class _RollupSyncBase:
     def _applied_batch_id(self):
         return self._meta_state()[0]
 
-    def _state_fingerprint(self):
-        """A driver-side (zero-job) fingerprint of the state table's
-        committed version: the manifest version on commit-log formats,
-        the staging-swap commit-marker mtimes on plain parquet.  Lets
-        the streaming path prove its carried ``(applied, watermark)``
-        pair is still the table's latest committed meta — any OTHER
-        writer's commit (an interleaved batch ``sync_from_changes``
-        between triggers) changes the fingerprint and forces a fresh
-        ``_meta_state`` read.  ``None`` = unattributable: callers must
-        re-read."""
-        fmt = self.wh.fmt
-        try:
-            man = getattr(fmt, "_manifest", None)
-            if man is not None:
-                m = man(self.table_name)
-                if m is None:
-                    return None
-                # version alone could collide across a DROP+recreate of
-                # the same table name; the head entry's uuid dir name
-                # cannot (fresh uuid per write)
-                e0 = m["entries"][0]["dir"] if m["entries"] else None
-                return ("v", int(m["version"]), e0, len(m["entries"]))
-            key_fn = getattr(fmt, "_schema_memo_key", None)
-            if key_fn is not None:
-                return ("m", key_fn(fmt.path(self.table_name)))
-        except Exception:
-            return None
-        return None
-
     def sync_from_changes(self, fmt, source_table: str) -> DataFrame:
         """Maintain this rollup FROM a commit-log table's change feed
         (``ManifestFormat.read_changes``) — the two halves of the
         incremental story joined: the storage layer hands over exactly
         the rows appended since the last synced manifest version, and
         the rollup merges only those.  The source's manifest version IS
-        the batch id (monotone ints, committed inside the same atomic
-        swap as the merged state), so a crashed-and-retried sync
+        the batch id (monotone ints, committed atomically with the
+        merged state), so a crashed-and-retried sync
         re-reads the identical delta and no-ops — exactly-once with no
         extra cursor table.  First call bootstraps from a full read.
         A feed refusal (history rewritten / compaction mixed the delta,
@@ -854,14 +809,7 @@ class _RollupSyncBase:
 
         from ..streaming.cdf_source import register_cdf_source
 
-        # fingerprint BEFORE the meta read: if a foreign commit lands
-        # between the two, the fingerprint is older than the meta and
-        # the first trigger's equality check forces a fresh read — the
-        # safe direction (the reverse order could pair a NEWER
-        # fingerprint with a stale meta)
-        fp0 = self._state_fingerprint()
-        meta0 = self._meta_state()
-        applied = meta0[0]
+        applied = self._applied_batch_id()
         if applied is None:
             raise ValueError(
                 "maintain_stream requires a bootstrapped rollup — run "
@@ -889,19 +837,6 @@ class _RollupSyncBase:
                 checkpoint.rstrip("/") + "_cdf_progress",
             )
 
-        # carried meta (r16, VERDICT r15 task 4): inside one stream the
-        # rollup cursor is read-your-writes, so the ``(applied,
-        # watermark)`` pair from the previous trigger's commit replaces
-        # the per-trigger state-table read — one Spark job saved per
-        # micro-batch.  Guarded, not blind: the pair is only reused
-        # while the state table's commit fingerprint (driver metadata,
-        # zero jobs) is unchanged since our own commit, so a batch sync
-        # interleaved between triggers invalidates the carry; any
-        # exception also invalidates (state unknown mid-trigger).
-        # Seeded from the startup read above, so the FIRST trigger
-        # skips its state-table read too (one job per stream run).
-        carried: list = [(fp0, meta0) if fp0 is not None else None]
-
         def apply_batch(batch_df, _engine_batch_id):
             # pin the micro-batch: the metadata aggregate and the
             # delta's merge evaluations each re-drive the Arrow CDF
@@ -909,12 +844,7 @@ class _RollupSyncBase:
             # evaluation; r15 optimization round)
             batch_df = batch_df.persist()
             try:
-                carried[0] = self._apply_stream_batch(
-                    batch_df, source_table, _carried=carried[0]
-                )
-            except BaseException:
-                carried[0] = None
-                raise
+                self._apply_stream_batch(batch_df, source_table)
             finally:
                 batch_df.unpersist()
 
@@ -927,16 +857,12 @@ class _RollupSyncBase:
             writer = writer.trigger(availableNow=True)
         return writer.start()
 
-    def _apply_stream_batch(
-        self, batch_df, source_table: str, _carried: tuple | None = None
-    ):
+    def _apply_stream_batch(self, batch_df, source_table: str) -> None:
         """One ``maintain_stream`` micro-batch against the rollup —
-        ``batch_df`` arrives persisted (the caller unpersists).
-
-        ``_carried`` is the previous trigger's ``(state_fingerprint,
-        (applied, watermark))``; returns the pair to carry into the
-        next trigger (``None`` when unknown — the next trigger then
-        reads the state table as before)."""
+        ``batch_df`` arrives persisted (the caller unpersists).  The
+        cursor is read afresh per trigger (zero jobs on commit-log
+        formats), so a foreign writer's commit between triggers is
+        always seen."""
         from pyspark.sql import functions as F
 
         # ONE evaluation for all per-batch metadata: version span
@@ -950,20 +876,11 @@ class _RollupSyncBase:
         ).first()
         vmax, vmin, kinds = agg[0], agg[1], set(agg[2] or [])
         if vmax is None:
-            return _carried  # empty micro-batch: state untouched
-        fp = self._state_fingerprint()
-        if (
-            _carried is not None
-            and fp is not None
-            and _carried[0] == fp
-        ):
-            meta = _carried[1]  # our own last commit, still the head
-        else:
-            meta = self._meta_state()
+            return  # empty micro-batch: state untouched
+        meta = self._meta_state()
         cur = meta[0]
         if cur is not None and int(vmax) <= int(cur):
-            # engine-checkpoint replay: already absorbed
-            return (fp, meta) if fp is not None else None
+            return  # engine-checkpoint replay: already absorbed
         if cur is not None and int(vmin) <= int(cur):
             raise ValueError(
                 f"micro-batch spans versions ({vmin}, {vmax}] but "
@@ -992,18 +909,7 @@ class _RollupSyncBase:
                     "rebuild the rollup from a full read"
                 )
             delta = batch_df.drop("_change_type", "_commit_version")
-        self._committed_meta = None
         self.sync(delta, batch_id=int(vmax), _meta=meta)
-        new_meta = self._committed_meta
-        if new_meta is None:
-            return None
-        # fingerprint AFTER our commit (read-your-writes, driver
-        # metadata).  A foreign commit landing inside this same
-        # microsecond window would go unnoticed until ITS next commit —
-        # the same two-concurrent-writers race the batch path already
-        # documents as conflict-retry territory, not new exposure.
-        fp2 = self._state_fingerprint()
-        return (fp2, new_meta) if fp2 is not None else None
 
     def sync(
         self,
@@ -1016,8 +922,9 @@ class _RollupSyncBase:
         batch (id == the last committed id) is a no-op.  ``_meta`` is
         an internal caller hint — the ``(applied, watermark)`` pair a
         caller already fetched this cycle (``sync_from_changes`` /
-        ``maintain_stream``), saving the re-fetch job; callers must
-        only pass a pair read AFTER their last state write."""
+        ``maintain_stream``), saving the re-fetch (a job on
+        ``ParquetFormat``); callers must only pass a pair read AFTER
+        their last state write."""
         from pyspark.sql import functions as F
 
         if _meta is None and (
@@ -1095,49 +1002,38 @@ class _RollupSyncBase:
             stored_wm = _meta[1] if _meta is not None else None
             wm_new = max((w for w in (batch_wm, stored_wm) if w is not None),
                          default=None)
-        if batch_id is not None or wm_new is not None:
-            # the batch id + watermark ride the SAME staged swap as the
-            # data — committed together or not at all, which is what
-            # makes the replay check above exactly-once and the
-            # materialized watermark trustworthy on plain parquet
+        # the batch id + watermark commit together with the data or not
+        # at all — what makes the replay check above exactly-once and
+        # the materialized watermark trustworthy (class docstring)
+        bid = None if batch_id is None else int(batch_id)
+        txn_update = None
+        if hasattr(self.wh.fmt, "_manifest"):
+            txn_update = {
+                k: v
+                for k, v in (
+                    (self._TXN_BATCH_ID, bid), (self._TXN_WATERMARK, wm_new)
+                )
+                if v is not None
+            }
+        elif bid is not None or wm_new is not None:
             from ..session import local_rows
 
             meta = local_rows(
                 self.spark,
-                [(
-                    self._META_KEY,
-                    None if batch_id is None else int(batch_id),
-                    wm_new,
-                )],
+                [(self._META_KEY, bid, wm_new)],
                 "__agg_key string, __last_batch_id long, __watermark string",
             )
             delta = delta.unionByName(meta, allowMissingColumns=True)
         self.wh.materialize_upsert(
             self.table_name, delta, unique_key="__agg_key",
             record_cdc=False,  # internal state: nobody tails it
+            txn_update=txn_update,
         )
-        cache_key = (self.wh.root, self.table_name)
-        if batch_id is not None or wm_new is not None:
-            # read-your-writes meta for the streaming carry (r16):
-            # exactly the pair the sentinel row just committed
-            self._committed_meta = (
-                None if batch_id is None else int(batch_id),
-                wm_new,
-            )
-            fp2 = self._state_fingerprint()
-            if fp2 is not None and fp2[0] == "v":
-                _META_FP_CACHE[cache_key] = (fp2, self._committed_meta)
-            else:
-                _META_FP_CACHE.pop(cache_key, None)
-        else:
-            # no meta row in this commit: the merge preserved whatever
-            # sentinel the table held, but OUR commit changed the
-            # fingerprint — drop the entry, the next read refreshes
-            _META_FP_CACHE.pop(cache_key, None)
         return self.read()
 
     def _stored(self) -> DataFrame:
-        """Stored per-group state minus the meta sentinel and internals."""
+        """Stored per-group state minus the ``ParquetFormat`` meta
+        sentinel and its columns."""
         from pyspark.sql import functions as F
 
         df = self.wh.read(self.table_name).filter(
@@ -1722,7 +1618,7 @@ class IncrementalTopKSync(_RollupSyncBase):
     Size ``cap`` to the expected skew (8x headroom over
     ``k`` default); groups near the cap are visible via
     ``n_tracked == cap`` in :meth:`read`.  Delivery/replay contract:
-    ``_RollupSyncBase`` (batch-id sentinel rides the same atomic swap).
+    ``_RollupSyncBase`` (the batch id commits with the merged state).
     """
 
     def __init__(

@@ -318,9 +318,9 @@ def monthly_summary(spark, sf_dir):
     oracle="""
     SELECT c.c_custkey AS user_id, c.c_name AS name,
            c.c_mktsegment AS segment, c.c_acctbal AS acctbal,
-           ARRAY_TO_STRING(
+           COALESCE(ARRAY_TO_STRING(
              COALESCE(LIST_SORT(LIST(o.o_orderkey) FILTER (WHERE o.o_orderkey IS NOT NULL)), []),
-             ',') AS orderkeys
+             ','), '') AS orderkeys
     FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
     GROUP BY 1, 2, 3, 4
     """,
@@ -328,7 +328,9 @@ def monthly_summary(spark, sf_dir):
 def stage_users(spark, sf_dir):
     """J2/A3 — users LEFT JOIN devices then ARRAY_AGG, keeping users with
     no matches (users.sql:17-27).  collect_list drops the left-join NULLs
-    (→ empty array); sorted for cross-engine determinism.
+    (→ empty array, joined to ``''``); sorted for cross-engine
+    determinism.  The oracle's outer COALESCE matches that ``''``:
+    DuckDB's ``ARRAY_TO_STRING`` of an empty list is NULL.
 
     The array is emitted as a comma-joined string on BOTH sides: the
     driver's canonicalizer hashes flat values and chokes on list-typed

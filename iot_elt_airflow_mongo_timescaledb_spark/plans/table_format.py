@@ -70,26 +70,32 @@ from ..fs import HadoopFS, join_uri
 # one entry at a time (r16; the r15 wholesale clear() re-paid footer
 # inference for every live dir at once when the cap was hit).  Stale
 # keys of vacuumed/dropped dirs are never re-read (uuid dir names are
-# never reused) and age out of the LRU.
+# never reused) and age out of the LRU.  One lock guards both verbs:
+# a get REORDERS the LRU, and the threaded ``sync_all`` / parallel
+# ``HealthPipeline.sync`` read and write tables from several threads.
+import threading
 from collections import OrderedDict
 
 _DIR_SCHEMA_CACHE: OrderedDict[tuple, object] = OrderedDict()
 _DIR_SCHEMA_CACHE_CAP = 4096
+_DIR_SCHEMA_LOCK = threading.Lock()
 
 
 def _dir_schema_get(key: tuple):
-    schema = _DIR_SCHEMA_CACHE.get(key)
-    if schema is not None:
-        _DIR_SCHEMA_CACHE.move_to_end(key)
-    return schema
+    with _DIR_SCHEMA_LOCK:
+        schema = _DIR_SCHEMA_CACHE.get(key)
+        if schema is not None:
+            _DIR_SCHEMA_CACHE.move_to_end(key)
+        return schema
 
 
 def _dir_schema_put(key: tuple, schema) -> None:
-    if key in _DIR_SCHEMA_CACHE:
-        _DIR_SCHEMA_CACHE.move_to_end(key)
-    elif len(_DIR_SCHEMA_CACHE) >= _DIR_SCHEMA_CACHE_CAP:
-        _DIR_SCHEMA_CACHE.popitem(last=False)
-    _DIR_SCHEMA_CACHE[key] = schema
+    with _DIR_SCHEMA_LOCK:
+        if key in _DIR_SCHEMA_CACHE:
+            _DIR_SCHEMA_CACHE.move_to_end(key)
+        elif len(_DIR_SCHEMA_CACHE) >= _DIR_SCHEMA_CACHE_CAP:
+            _DIR_SCHEMA_CACHE.popitem(last=False)
+        _DIR_SCHEMA_CACHE[key] = schema
 
 
 def _enc_stat(v):
@@ -1974,16 +1980,28 @@ class ManifestFormat(TableFormat):
     @staticmethod
     def _overlay_txn(txn: dict | None, txn_update: dict | None):
         """Overlay idempotent-writer watermark UPDATES onto a carried
-        txn map (r14): per app id the HIGHER batch id wins (watermarks
-        are monotone), and the overlay re-applies on every conflict
-        rebase so a DML that advances its own cursor never loses it to
-        a concurrent commit's carried map."""
+        txn map (r14): per key the HIGHER value wins (watermarks are
+        monotone) and a ``None`` value records nothing.  Values compare
+        in their own type — batch ids as ints, a rollup's materialized
+        watermark as its timestamp string (string order is time order,
+        the rule the rollup's ``sync`` applies) — and a key whose type
+        changes raises instead of mis-ordering.  The overlay re-applies
+        on every conflict rebase so a DML that advances its own cursor
+        never loses it to a concurrent commit's carried map."""
         if not txn_update:
             return txn
         out = dict(txn or {})
         for k, v in txn_update.items():
+            if v is None:
+                continue
             old = out.get(k)
-            out[k] = max(int(old), int(v)) if old is not None else int(v)
+            if old is not None and type(old) is not type(v):
+                raise TypeError(
+                    f"txn key {k!r}: committed {type(old).__name__} "
+                    f"{old!r} cannot order against {type(v).__name__} "
+                    f"{v!r}"
+                )
+            out[k] = v if old is None else max(old, v)
         return out
 
     def _commit(
@@ -3987,13 +4005,11 @@ class ManifestFormat(TableFormat):
     def set_txn(self, name: str, txn: dict) -> bool:
         """Merge idempotent-writer watermarks into the head manifest —
         a METADATA-ONLY rebaseable commit (entries untouched, no data
-        write).  Per app id the HIGHER batch id wins (watermarks are
-        monotone), so restoring never rolls a cursor back under a
-        concurrent stream.  The legitimate use: re-recording cursors a
-        deliberate replace reset — e.g. the ANN index's retrain
-        rewrites its assignments table via replace_atomic (reset by
-        contract) and then restores the sync cursor so incremental
-        maintenance stays incremental.  Returns False when nothing
+        write).  Per key the HIGHER value wins (``_overlay_txn``), so
+        restoring never rolls a cursor back under a concurrent stream.
+        Uses: re-recording cursors a deliberate replace reset, and the
+        cursor advance of a ``merge``/``merge_mor`` whose delta turned
+        out empty (no data commit to ride).  Returns False when nothing
         needed recording."""
 
         def edit(head):
@@ -4001,13 +4017,7 @@ class ManifestFormat(TableFormat):
                 raise FileNotFoundError(
                     f"set_txn: no committed manifest for table {name}"
                 )
-            merged = dict(head.get("txn") or {})
-            for k, v in txn.items():
-                if v is None:
-                    continue
-                cur = merged.get(k)
-                if cur is None or int(v) > int(cur):
-                    merged[k] = int(v)
+            merged = self._overlay_txn(dict(head.get("txn") or {}), txn)
             if merged == (head.get("txn") or {}):
                 return None
             return head["entries"], head["partition_columns"], merged
@@ -4022,12 +4032,12 @@ class ManifestFormat(TableFormat):
         design: the manifest carries per-``app_id`` watermarks of the
         last committed ``batch_id``, updated INSIDE the same CAS commit
         as the appended entries, so a replayed batch (its id at or
-        below the watermark) no-ops instead of landing twice.  This is
-        the streaming twin of the rollup family's batch-id sentinel,
-        but for RAW appends: the exactly-once guarantee lives in the
-        table, not in a side cursor.  Multiple apps (or multiple
-        queries) write the same table independently — each id stream
-        is tracked per ``app_id``.  Returns True if the batch
+        below the watermark) no-ops instead of landing twice.  The
+        rollup family's batch-id cursor is the same mechanism riding a
+        merge; this is it for RAW appends: the exactly-once guarantee
+        lives in the table, not in a side cursor.  Multiple apps (or
+        multiple queries) write the same table independently — each id
+        stream is tracked per ``app_id``.  Returns True if the batch
         committed, False if it was a recognized replay.
 
         Contract: ``batch_id`` must be monotone per ``app_id`` (what
@@ -5703,7 +5713,10 @@ class ManifestFormat(TableFormat):
         batch id wins, re-applied across conflict rebases — see
         ``_overlay_txn``): the single-commit form of retract-merge +
         watermark-append that the ANN CDF sync previously paid two
-        commits and two table rewrites for."""
+        commits and two table rewrites for.  A merge that writes and
+        deletes nothing still commits a non-empty ``txn_update``
+        (metadata only, ``set_txn``), so an empty delta advances its
+        writer's cursor like any other."""
         return self._retry_conflicts(
             name,
             lambda: self._merge_once(
@@ -5819,7 +5832,12 @@ class ManifestFormat(TableFormat):
             if matched is not None and self.cdf and record_cdc:
                 matched.unpersist()
             if df.isEmpty():
-                return  # delete-only merge with nothing to delete
+                # delete-only merge with nothing to delete: no data
+                # commit, but a cursor advance still lands (metadata
+                # only) — an empty delta must not stall its writer
+                if txn_update:
+                    self.set_txn(name, txn_update)
+                return
             # no target row carries a batch key: the merge degrades to
             # an append of the batch — but NOT a blind one: the no-match
             # conclusion was computed against this snapshot, so a
@@ -6131,7 +6149,9 @@ class ManifestFormat(TableFormat):
             ):
                 matched.unpersist()
             if df.isEmpty():
-                return  # delete-only merge with nothing to delete
+                if txn_update:
+                    self.set_txn(name, txn_update)  # as in merge
+                return
             # degraded append — conflict-checked against the key range,
             # same reasoning as the COW form's degraded path
             app_schema = self._enforce_append_schema(name, m, df)

@@ -89,3 +89,47 @@ def test_gated_oracle_types_are_pandas_safe(duck):
         "gated oracle emits pandas-lossy column type(s) — CAST to "
         "BIGINT/DOUBLE/VARCHAR in the oracle SQL: " + "; ".join(offenders)
     )
+
+
+def test_stage_users_oracle_matches_for_customer_without_orders(
+    spark, tmp_path
+):
+    """A customer with no orders: the Spark query joins the empty key
+    list to ``''``, and the oracle must too (DuckDB's ``ARRAY_TO_STRING``
+    of an empty list is NULL).  The sf0.01 gate data has no such
+    customer, so only this tiny pair shows it."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({
+            "c_custkey": pa.array([1, 2], pa.int64()),
+            "c_name": ["c1", "c2"],
+            "c_nationkey": pa.array([0, 0], pa.int32()),
+            "c_acctbal": [1.5, 2.5],
+            "c_mktsegment": ["AUTO", "AUTO"],
+        }),
+        str(tmp_path / "customer.parquet"),
+    )
+    pq.write_table(
+        pa.table({
+            "o_orderkey": pa.array([11, 10], pa.int64()),
+            "o_custkey": pa.array([1, 1], pa.int64()),
+        }),
+        str(tmp_path / "orders.parquet"),
+    )
+    con = duckdb.connect()
+    for t in ("customer", "orders"):
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"read_parquet('{tmp_path}/{t}.parquet')"
+        )
+    fn, sql = _QUERIES["stage_users"], _ORACLES["stage_users"]
+    got = {
+        r["user_id"]: r["orderkeys"]
+        for r in fn(spark, str(tmp_path)).collect()
+    }
+    assert got == {1: "10,11", 2: ""}
+    assert compare_query(spark, con, fn, sql, str(tmp_path)) == []
+    con.close()

@@ -11,7 +11,10 @@ Pins the three cross-cutting changes of the optimization round:
   rows, including across additive evolution (a NEW dir gets its own
   cache entry; old dirs' cached physical schemas still cast/map up).
 - ``_RollupSyncBase._meta_state``: the fused (batch id, watermark)
-  fetch equals the two single-field getters.
+  fetch equals the two single-field getters, on the sentinel-row
+  (parquet) and the manifest-``txn`` cursor alike.
+- ``session.local_rows`` fast path: a value whose Python type does not
+  fit its field never turns into a silent NULL.
 """
 
 from __future__ import annotations
@@ -37,6 +40,25 @@ def test_local_rows_empty_and_inferred(spark):
     assert empty.schema.simpleString() == "struct<k:bigint,v:string>"
     named = local_rows(spark, [(7,)], ["last_value"])
     assert named.first()["last_value"] == 7
+
+
+def test_local_rows_mistyped_value_is_never_null(spark):
+    """A ``str`` in a ``long`` field: a non-ANSI ``lit().cast()`` would
+    yield NULL; the fast path must refuse it so ``createDataFrame``'s
+    row verification fails loudly instead."""
+    key = "spark.sql.ansi.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        with pytest.raises(Exception, match="LongType"):
+            local_rows(spark, [("7x", "a")], "k long, v string").collect()
+        with pytest.raises(Exception, match="LongType"):
+            local_rows(spark, [([True],)], "k array<long>").collect()
+    finally:
+        spark.conf.set(key, prev)
+    # well-typed values keep the fast path, ints widen into doubles
+    ok = local_rows(spark, [(7, 2)], "k long, d double").first()
+    assert ok["k"] == 7 and ok["d"] == 2.0
 
 
 def test_dir_schema_memo_reread_and_evolution(spark, tmp_path):
@@ -70,7 +92,19 @@ def test_dir_schema_memo_reread_and_evolution(spark, tmp_path):
     assert len(got) == 8
 
 
-def test_meta_state_matches_single_getters(spark, tmp_path):
+def _state_format(spark, tmp_path, kind):
+    """``None`` = the default ParquetFormat (sentinel-row cursor)."""
+    from iot_elt_airflow_mongo_timescaledb_spark.plans.table_format import (
+        ManifestFormat,
+    )
+
+    if kind == "parquet":
+        return None
+    return ManifestFormat(spark, str(tmp_path), auto_compact_dirs=None)
+
+
+@pytest.mark.parametrize("kind", ["parquet", "manifest"])
+def test_meta_state_matches_single_getters(spark, tmp_path, kind):
     from iot_elt_airflow_mongo_timescaledb_spark.plans.pipeline import (
         IncrementalAggSync,
     )
@@ -82,6 +116,7 @@ def test_meta_state_matches_single_getters(spark, tmp_path):
         group_cols=("g",),
         sum_cols=("v",),
         watermark_col="ts",
+        table_format=_state_format(spark, tmp_path, kind),
     )
     batch = spark.createDataFrame(
         [("a", 1.0, "2020-01-01"), ("b", 2.0, "2020-01-03")],
@@ -96,13 +131,15 @@ def test_meta_state_matches_single_getters(spark, tmp_path):
     assert out.filter(F.col("g") == "a").first()["sum_v"] == 1.0
 
 
-def test_meta_hint_respected_by_sync(spark, tmp_path):
+@pytest.mark.parametrize("kind", ["parquet", "manifest"])
+def test_meta_hint_respected_by_sync(spark, tmp_path, kind):
     from iot_elt_airflow_mongo_timescaledb_spark.plans.pipeline import (
         IncrementalAggSync,
     )
 
     sync = IncrementalAggSync(
-        spark, str(tmp_path), "agg.h", group_cols=("g",), sum_cols=("v",)
+        spark, str(tmp_path), "agg.h", group_cols=("g",), sum_cols=("v",),
+        table_format=_state_format(spark, tmp_path, kind),
     )
     b1 = spark.createDataFrame([("a", 1.0)], "g string, v double")
     sync.sync(b1, batch_id=1)

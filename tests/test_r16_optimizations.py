@@ -11,9 +11,12 @@ Pins the cross-cutting changes of optimization round 2:
   evolution must still NULL-fill across dirs.
 - ``_DIR_SCHEMA_CACHE`` LRU: exceeding the cap evicts ONE entry (the
   least recently used), not the whole memo (ADVICE r15 #2).
-- streaming carried meta: within one ``maintain_stream`` life the
-  ``(applied, watermark)`` pair carries across triggers guarded by the
-  state table's commit fingerprint; a foreign commit invalidates it.
+- ``_DIR_SCHEMA_CACHE`` lock: concurrent gets (which reorder the LRU)
+  and evicting puts never corrupt the memo or raise.
+- the rollup cursor on commit-log formats: ``(applied, watermark)``
+  are manifest ``txn`` keys, read with zero Spark jobs on a fresh or a
+  warm instance, and every commit (a foreign instance's too) is
+  visible to the very next stream trigger.
 """
 
 from __future__ import annotations
@@ -117,10 +120,27 @@ def _cdf_batch(spark, rows, version):
     )
 
 
-def test_stream_carried_meta_fast_path_and_invalidation(spark, tmp_path):
-    """Two simulated triggers: the second must consume the carried
-    pair (zero state-table reads) and stay exactly-once; a foreign
-    commit between triggers must invalidate the carry."""
+def _jobs_in(spark, fn):
+    """Spark job ids started while ``fn`` runs, attributed by a job
+    group set on this thread."""
+    sc = spark.sparkContext
+    group = f"cursor-probe-{id(fn)}"
+    sc.setJobGroup(group, "cursor read")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_manifest_rollup_cursor_zero_jobs_and_foreign_commits(
+    spark, tmp_path
+):
+    """The rollup cursor lives in the state table's manifest ``txn``
+    map: reading it runs no Spark job (fresh instance or warm), no
+    ``__meta__`` row is written, a foreign instance's commit is seen by
+    the very next trigger, and replays still skip."""
     from iot_elt_airflow_mongo_timescaledb_spark.plans import pipeline as pl
 
     fmt = ManifestFormat(
@@ -134,71 +154,95 @@ def test_stream_carried_meta_fast_path_and_invalidation(spark, tmp_path):
         ),
         "overwrite",
     )
-    agg = pl.IncrementalAggSync(
-        spark, str(tmp_path), "agg.s", group_cols=("day",),
-        sum_cols=("v",), table_format=fmt,
-    )
+
+    def rollup():
+        return pl.IncrementalAggSync(
+            spark, str(tmp_path), "agg.s", group_cols=("day",),
+            sum_cols=("v",), watermark_col="day", table_format=fmt,
+        )
+
+    agg = rollup()
     agg.sync_from_cdf(fmt, "raw.f")  # bootstrap at source version 1
 
-    meta_calls = {"n": 0}
-    orig = pl._RollupSyncBase._meta_state
+    def cursor(inst):
+        return (
+            inst._meta_state(),
+            inst._applied_batch_id(),
+            inst.materialized_watermark(),
+        )
 
-    def counting(self):
-        meta_calls["n"] += 1
-        return orig(self)
+    cold, jobs = _jobs_in(spark, lambda: cursor(rollup()))
+    assert cold == ((1, "d1"), 1, "d1") and jobs == []
+    warm, jobs = _jobs_in(spark, lambda: cursor(agg))
+    assert warm == cold and jobs == []
+    state = fmt.read("agg.s")
+    assert "__last_batch_id" not in state.columns
+    assert state.filter(F.col("__agg_key") == "__meta__").count() == 0
 
-    pl._RollupSyncBase._meta_state = counting
-    try:
-        # trigger 1: no carry -> one state read, returns the pair
-        carried = agg._apply_stream_batch(
-            _cdf_batch(spark, [(3, "d0", 5.0)], 2), "raw.f", _carried=None
-        )
-        assert carried is not None
-        assert carried[1][0] == 2  # applied == the batch's version
-        assert meta_calls["n"] == 1
-        # trigger 2: carried pair verified by fingerprint -> NO read
-        carried = agg._apply_stream_batch(
-            _cdf_batch(spark, [(4, "d1", 7.0)], 3), "raw.f",
-            _carried=carried,
-        )
-        assert carried is not None and carried[1][0] == 3
-        assert meta_calls["n"] == 1  # unchanged: fast path took over
-        # engine replay of the SAME batch: skipped via the carry alone
-        carried = agg._apply_stream_batch(
-            _cdf_batch(spark, [(4, "d1", 7.0)], 3), "raw.f",
-            _carried=carried,
-        )
-        assert carried is not None and carried[1][0] == 3
-        assert meta_calls["n"] == 1
-        # foreign commit (another writer instance) -> fingerprint
-        # mismatch -> the next trigger re-reads the state table
-        other = pl.IncrementalAggSync(
-            spark, str(tmp_path), "agg.s", group_cols=("day",),
-            sum_cols=("v",), table_format=fmt,
-        )
-        other.sync(
-            spark.createDataFrame([("d9", 1.0)], "day string, v double"),
-            batch_id=4,
-        )
-        n_after_foreign = meta_calls["n"]  # the foreign sync reads too
-        carried = agg._apply_stream_batch(
-            _cdf_batch(spark, [(5, "d0", 9.0)], 5), "raw.f",
-            _carried=carried,
-        )
-        assert meta_calls["n"] == n_after_foreign + 1  # fresh read forced
-        assert carried is not None and carried[1][0] == 5
-    finally:
-        pl._RollupSyncBase._meta_state = orig
-
-    # state equals the recompute over everything applied
+    agg._apply_stream_batch(_cdf_batch(spark, [(3, "d0", 5.0)], 2), "raw.f")
+    assert agg._applied_batch_id() == 2
+    # a foreign instance commits batch 4: the next trigger must see it,
+    # so a batch at version 3 is a replay, not new facts
+    rollup().sync(
+        spark.createDataFrame([("d9", 1.0)], "day string, v double"),
+        batch_id=4,
+    )
+    agg._apply_stream_batch(_cdf_batch(spark, [(4, "d1", 7.0)], 3), "raw.f")
+    assert agg._meta_state() == (4, "d9")
+    agg._apply_stream_batch(_cdf_batch(spark, [(5, "d0", 9.0)], 5), "raw.f")
+    # engine replay of the same batch: skipped
+    agg._apply_stream_batch(_cdf_batch(spark, [(5, "d0", 9.0)], 5), "raw.f")
+    assert agg._applied_batch_id() == 5
     got = {
         (r["day"], round(r["sum_v"], 6)) for r in agg.read().collect()
     }
-    assert got == {
-        ("d0", 1.0 + 5.0 + 9.0),
-        ("d1", 2.0 + 7.0),
-        ("d9", 1.0),
-    }
+    assert got == {("d0", 1.0 + 5.0 + 9.0), ("d1", 2.0), ("d9", 1.0)}
+
+
+def test_dir_schema_cache_threaded_gets_and_evictions():
+    """Gets reorder the LRU while puts evict: without one lock a get
+    can find a key, lose it to another thread's eviction and fail in
+    ``move_to_end``.  A few threads, no Spark."""
+    import sys
+    import threading
+
+    saved = dict(table_format._DIR_SCHEMA_CACHE)
+    saved_cap = table_format._DIR_SCHEMA_CACHE_CAP
+    saved_switch = sys.getswitchinterval()
+    errors = []
+
+    def worker(seed):
+        try:
+            for i in range(20000):
+                key = (f"d{(i * 7 + seed) % 24}", ())
+                if table_format._dir_schema_get(key) is None:
+                    table_format._dir_schema_put(key, key[0])
+        except Exception as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    try:
+        table_format._DIR_SCHEMA_CACHE.clear()
+        table_format._DIR_SCHEMA_CACHE_CAP = 8
+        sys.setswitchinterval(1e-6)
+        # more threads than this host's 4 cores, still only a few
+        threads = [
+            threading.Thread(target=worker, args=(s,)) for s in range(6)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+        assert errors == []
+        assert len(table_format._DIR_SCHEMA_CACHE) <= 8
+        assert all(
+            v == k[0] for k, v in table_format._DIR_SCHEMA_CACHE.items()
+        )
+    finally:
+        sys.setswitchinterval(saved_switch)
+        table_format._DIR_SCHEMA_CACHE_CAP = saved_cap
+        table_format._DIR_SCHEMA_CACHE.clear()
+        table_format._DIR_SCHEMA_CACHE.update(saved)
 
 
 def test_sync_unpersists_delta_on_watermark_refusal(spark, tmp_path):

@@ -152,3 +152,24 @@ def test_retracting_last_nonnull_value_serves_null(spark, setup):
     assert _rollup(agg) == _recompute(fmt, "raw.t") == {("d1", None, 2)}
     # avg derives NULL too, not 0
     assert agg.read().collect()[0]["avg_v"] is None
+
+
+def test_cdf_sync_over_version_without_changes_advances_cursor(
+    spark, setup
+):
+    """A source version with no change rows (a compaction) gives an
+    empty delta; the merge still commits the cursor, so the rollup
+    does not re-read that version forever."""
+    fmt, agg = setup
+    fmt.write("raw.t", _rows(spark, (1, "d1", 10)), "overwrite")
+    fmt.write("raw.t", _rows(spark, (2, "d2", 20)), "append")
+    agg.sync_from_cdf(fmt, "raw.t")
+    before = fmt._manifest("agg.daily_v")["version"]
+    assert fmt.maybe_compact("raw.t", force=True) > 0
+    head = fmt._manifest("raw.t")["version"]
+    assert agg._applied_batch_id() < head
+    agg.sync_from_cdf(fmt, "raw.t")
+    assert agg._applied_batch_id() == head
+    m = fmt._manifest("agg.daily_v")
+    assert m["version"] == before + 1  # one metadata-only commit
+    assert _rollup(agg) == _recompute(fmt, "raw.t")
