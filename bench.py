@@ -121,10 +121,9 @@ EXTENDED = [
     "rollup_cdf_upsert",           # retraction-aware rollup over merges
     # round-11 additions
     "ann_cdf_upsert_topk",         # retraction-aware ANN index over merges
-    "manifest_merge_mor",          # merge-on-read MERGE (equality deletes)
+    "manifest_merge_mor",          # merge-on-read MERGE (positional DVs)
     "manifest_update_mor",         # merge-on-read UPDATE (postimage append)
     # round-12 additions
-    "manifest_merge_mor_pos",      # merge-on-read MERGE (positional DVs)
     "manifest_bloom_lookup",       # per-entry bloom point-lookup pruning
     "bpe_merges",                  # distributed BPE merge training
     # round-13 additions

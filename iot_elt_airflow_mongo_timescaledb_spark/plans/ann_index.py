@@ -282,7 +282,7 @@ class IncrementalANNSync:
         full-scan action materializes it — the assignments write — so
         train/retrain/armed-sync pay ONE pass instead of persist +
         separate aggregation job (VERDICT r12 wart 1; the same
-        pattern as `_land_dv_keys`'s mask counts).  Observation
+        pattern as `_land_dv_pos`'s mask counts).  Observation
         metrics are grouping-free, so the per-cluster means become
         one conditional SUM + COUNT pair per cluster of the (tiny)
         codebook.  Returns ``(observed_plan, obs)``; read results via
@@ -568,7 +568,7 @@ class IncrementalANNSync:
             # changed key AND inserts the re-assigned rows AND
             # advances the per-app watermark inside a single commit
             # (`txn_update`) — one candidate rewrite (COW) or one
-            # batch-append + key mask (MOR) instead of the
+            # batch-append + delete mask (MOR) instead of the
             # retract + watermark-append pair.  Only on the
             # probe-free shape: the drift-armed path keeps the
             # two-step so its Observation never meets merge's
@@ -598,9 +598,9 @@ class IncrementalANNSync:
             #    stats-bounded merge (empty batch = delete-only form,
             #    the materialize_delete pattern).  Insert-only keys
             #    match nothing and cost nothing.  ``mor=True`` retracts
-            #    through the MERGE-ON-READ form instead — a stored
-            #    equality-delete key file, ZERO assignment-file rewrite
-            #    per sync regardless of layout (the right cadence when
+            #    through the MERGE-ON-READ form instead — a positional
+            #    delete mask, ZERO assignment-file rewrite per sync
+            #    regardless of layout (the right cadence when
             #    the source upserts every 15 minutes and the
             #    assignments are not key-clustered); the read-time
             #    anti-join debt clears at ``retrain`` (a replace) or an

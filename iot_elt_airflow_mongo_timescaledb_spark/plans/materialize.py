@@ -206,8 +206,8 @@ class Warehouse:
     def update_where_mor(
         self, name: str, col: str | dict, set_exprs: dict, lo=None, hi=None
     ) -> int:
-        """Row-level UPDATE as merge-on-read: postimages append, the
-        predicate masks old rows, no survivor rewrite (commit-log
+        """Row-level UPDATE as merge-on-read: postimages append, a
+        positional delete mask drops the old rows, no survivor rewrite (commit-log
         formats; see ``ManifestFormat.update_where_mor``)."""
         return self._format_verb("update_where_mor")(
             name, col, set_exprs, lo, hi
@@ -220,8 +220,8 @@ class Warehouse:
         unique_key: str,
         delete_keys=None,
     ) -> None:
-        """MERGE as merge-on-read: the batch appends, matched keys mask
-        via a stored equality-delete key file, zero survivor rewrite
+        """MERGE as merge-on-read: the batch appends, matched keys' old
+        rows drop via a positional delete mask, zero survivor rewrite
         (commit-log formats; see ``ManifestFormat.merge_mor``)."""
         return self._format_verb("merge_mor")(name, df, unique_key, delete_keys)
 

@@ -1769,12 +1769,11 @@ def rollup_cdf_upsert(spark, sf_dir):
 )
 def manifest_mor_delete(spark, sf_dir):
     """MERGE-ON-READ row-level DELETE (round 10 ``delete_where_mor`` —
-    Delta deletion vectors / Iceberg v2 equality deletes as stored
-    predicates): customers land as five key-range chunks, a sub-range
-    of the middle chunk is deleted, and ALL FIVE entries must survive
-    byte-identical (lit-folded — the copy-on-write twin
-    manifest_delete_where carries four and rewrites one; here the
-    write cost is ONE manifest).  Reads apply the predicate, the CDF
+    Delta deletion vectors as positional masks): customers land as
+    five key-range chunks, a sub-range of the middle chunk is deleted,
+    and ALL FIVE entries must survive byte-identical (lit-folded — the
+    copy-on-write twin manifest_delete_where carries four and rewrites
+    one; here the write is one mask dir).  Reads apply the mask, the CDF
     serves the delete rows (count lit-folded), and the oracle
     recomputes both from the raw table."""
     from ..fs import scratch_dir
@@ -2155,68 +2154,22 @@ def manifest_clustered_skipping(spark, sf_dir):
     gate=False,  # storage-verb family: manifest_merge_bounded carries the gate
 )
 def manifest_merge_mor(spark, sf_dir):
-    return _merge_mor_impl(spark, sf_dir, "equality")
-
-
-_MERGE_MOR_ORACLE_NOTE = "both forms share one oracle: same final table"
-
-
-@query(
-    "manifest_merge_mor_pos",
-    oracle="""
-    WITH mx AS (SELECT MAX(c_custkey) AS m FROM customer),
-    b AS (
-        SELECT m * 2 // 5 AS b2,
-               (m * 3 // 5 - m * 2 // 5) // 3 AS w
-        FROM mx
-    ),
-    t AS (
-        SELECT c_custkey, c_mktsegment,
-               CASE WHEN c_custkey > b2 AND c_custkey <= b2 + w
-                    THEN ROUND(c_acctbal + 1000.0, 2) ELSE c_acctbal END AS bal,
-               c_custkey > b2 + w AND c_custkey <= b2 + 2 * w AS deleted
-        FROM customer, b
-    )
-    SELECT c_mktsegment,
-           COUNT(*) AS n,
-           ROUND(SUM(bal), 2) AS bal_sum,
-           5 AS entries_untouched,
-           1 AS new_dirs
-    FROM t
-    WHERE NOT deleted
-    GROUP BY c_mktsegment
-    """,
-    gate=False,  # storage-verb family: manifest_merge_bounded carries the gate
-)
-def manifest_merge_mor_pos(spark, sf_dir):
-    """The POSITIONAL-form twin of manifest_merge_mor (r12,
-    ``dv_form=\"positional\"``): identical merge lifecycle and oracle,
-    but the matched-key retraction lands as a (file, row-index) mask —
-    Delta's deletion-vector design — instead of an equality-delete key
-    file; reads anti-join on two machine columns scoped to exactly the
-    files containing retracted rows.  Same invariants lit-folded:
-    all five seeded entries carry byte-identical, one new dir."""
-    return _merge_mor_impl(spark, sf_dir, "positional")
-
-
-def _merge_mor_impl(spark, sf_dir, dv_form):
     """MERGE as MERGE-ON-READ (round 11 ``merge_mor`` — Delta's
-    DV-backed MERGE / Iceberg v2 equality deletes): customers land as
-    five key-range chunks, one range's balances upsert (+1000) and an
-    adjacent range purges via delete keys — the same M2 shape as
-    manifest_merge_bounded — but ALL FIVE seeded entries survive
-    byte-identical (lit-folded) and exactly ONE new dir lands (the
-    batch): the matched-key delete is a stored equality-delete key
-    file applied at read, so write cost is O(batch), independent of
-    touched-file size.  The oracle recomputes the post-merge table
-    from raw (plans/table_format.py:ManifestFormat.merge_mor)."""
+    DV-backed MERGE): customers land as five key-range chunks, one
+    range's balances upsert (+1000) and an adjacent range purges via
+    delete keys — the same M2 shape as manifest_merge_bounded — but
+    ALL FIVE seeded entries survive byte-identical (lit-folded) and
+    exactly ONE new dir lands (the batch): the matched keys' old rows
+    become a positional (file, row-index) delete mask applied at read,
+    so write cost is O(batch), independent of touched-file size.  The
+    oracle recomputes the post-merge table from raw
+    (plans/table_format.py:ManifestFormat.merge_mor)."""
     from ..fs import scratch_dir
     from .table_format import ManifestFormat
 
-    root = scratch_dir(spark, f"mmor_{dv_form[:2]}_", cleanup_atexit=True)
+    root = scratch_dir(spark, "mmor_", cleanup_atexit=True)
     fmt = ManifestFormat(
-        spark, root, auto_compact_dirs=None, stats_cols=("c_custkey",),
-        dv_form=dv_form,
+        spark, root, auto_compact_dirs=None, stats_cols=("c_custkey",)
     )
     c = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
@@ -2282,7 +2235,7 @@ def manifest_update_mor(spark, sf_dir):
     """Row-level UPDATE as MERGE-ON-READ (round 11 ``update_where_mor``):
     same shape as manifest_update_where, but ALL FIVE seeded entries
     survive byte-identical (lit-folded) and exactly ONE new dir lands
-    — the postimages; matched old rows mask via the stored predicate
+    — the postimages; matched old rows drop via a positional mask
     at read time, so write cost is O(matched rows), not O(candidate
     entries' content).  The oracle recomputes the post-update
     aggregate from the raw table

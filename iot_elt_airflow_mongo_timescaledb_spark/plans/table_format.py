@@ -98,6 +98,21 @@ def _dir_schema_put(key: tuple, schema) -> None:
         _DIR_SCHEMA_CACHE[key] = schema
 
 
+#: physical schema of a positional delete mask dir (``_land_dv_pos``)
+_DV_MASK_SCHEMA = "file string, pos long"
+
+#: the fix a refusal names when a manifest lists "dv", the reader
+#: feature every older build wrote with a dv list — whose entries may be
+#: stored predicates or equality-delete key files.  This build reads
+#: positional masks only ("dv-pos").
+RETIRED_DV_FIX = (
+    "its merge-on-read deletes use a retired form (stored predicates "
+    "or equality-delete key files) — run materialize_deletes on the "
+    "table under the previous build, which rewrites them into clean "
+    "files, then read it with this one"
+)
+
+
 def _enc_stat(v):
     """Encode one min/max stat for JSON manifest storage, with an
     ORDER-SAFETY tag:
@@ -805,7 +820,6 @@ class ManifestFormat(TableFormat):
         cluster_by: str | None = None,
         cdf: bool = False,
         auto_purge_dvs: int | None = None,
-        dv_form: str = "equality",
         bloom_cols: tuple[str, ...] = (),
         log_store: LogStore | None = None,
     ):
@@ -879,9 +893,9 @@ class ManifestFormat(TableFormat):
 
         ``auto_purge_dvs``: merge-on-read DEBT policy (Delta's
         OPTIMIZE removing deletion vectors) — when a MOR verb's commit
-        leaves more than this many stored delete predicates/key masks,
+        leaves more than this many stored delete masks,
         ``materialize_deletes`` runs immediately after: reads pay at
-        most ``auto_purge_dvs`` extra filters/anti-joins before one
+        most ``auto_purge_dvs`` masks in their anti-join before one
         bounded rewrite clears them all, so read amplification
         saw-tooths at the threshold instead of growing with the sync
         cadence (round-11 soak: the ANN assignment tail drifted +32%
@@ -901,14 +915,6 @@ class ManifestFormat(TableFormat):
         self.cluster_by = cluster_by
         self.cdf = cdf
         self.auto_purge_dvs = auto_purge_dvs
-        if dv_form not in ("equality", "positional"):
-            raise ValueError(
-                f"dv_form={dv_form!r}: 'equality' (stored predicates / "
-                "equality-delete key files — Iceberg v2 equality "
-                "deletes) or 'positional' ((file, row-index) masks — "
-                "Delta deletion vectors / Iceberg positional deletes)"
-            )
-        self.dv_form = dv_form
         # per-entry bloom filters for point-lookup skipping (r12,
         # VERDICT r11 task 4): min/max stats prune nothing for an
         # equality lookup on an UNCLUSTERED high-cardinality key
@@ -959,14 +965,16 @@ class ManifestFormat(TableFormat):
     BLOOM_K = 4
     #: MOR delete-mask row count at/under which the read-time
     #: anti-join broadcasts the mask side (the topk_realtime size-gate
-    #: pattern): ~100 B/row → ≤20 MB broadcast; above it (or when a
-    #: pre-r12 entry recorded no count) the join degrades to shuffle
+    #: pattern): ~100 B/row → ≤20 MB broadcast; above it the join
+    #: degrades to shuffle
     DV_BROADCAST_ROWS = 200_000
 
     #: reader protocol features THIS build implements; a manifest
     #: listing one outside this set refuses to resolve (see
-    #: _try_write_manifest's reader_features)
-    READER_FEATURES = frozenset({"dv", "dv-eq", "dv-pos", "column-mapping"})
+    #: _try_write_manifest's reader_features).  Older builds' dv lists
+    #: (feature "dv") may hold retired delete forms, so their tables
+    #: refuse too (RETIRED_DV_FIX says how to migrate them)
+    READER_FEATURES = frozenset({"dv-pos", "column-mapping"})
 
     # -- manifest machinery ---------------------------------------------
 
@@ -1148,8 +1156,9 @@ class ManifestFormat(TableFormat):
                 f"table {name} (v{m.get('version')}) requires reader "
                 f"feature(s) {sorted(unknown)} this build does not "
                 "implement — reading anyway would silently misinterpret "
-                "the data (Delta's readerFeatures contract); upgrade "
-                "the reader"
+                "the data (Delta's readerFeatures contract); "
+                + (RETIRED_DV_FIX if "dv" in unknown
+                   else "upgrade the reader")
             )
         raw_segs = m.get("segments") or []
         if not expand_lists:
@@ -1592,11 +1601,10 @@ class ManifestFormat(TableFormat):
     def fsck(self, name: str) -> dict:
         """Data-integrity audit (Delta's ``FSCK`` shape, READ-ONLY):
         verify every storage path the CURRENT manifest references
-        actually exists — entry dirs/files, MOR delete-vector sidecar
-        dirs (equality keys and positional masks), the retained CDF
-        dir — and census the table's data dirs into live (referenced
-        by SOME retained version) vs orphan (what vacuum would
-        reclaim).  Metadata reads + one existence probe per reference;
+        actually exists — entry dirs/files, MOR delete-mask dirs, the
+        retained CDF dir — and census the table's data dirs into live
+        (referenced by SOME retained version) vs orphan (what vacuum
+        would reclaim).  Metadata reads + one existence probe per reference;
         no data scan, no mutation.  A non-empty ``missing`` list means
         the manifest references deleted storage (manual deletion, or a
         vacuum raced an external retention assumption): recover by
@@ -1617,14 +1625,7 @@ class ManifestFormat(TableFormat):
         for e in m["entries"]:
             probe(self._entry_path(name, e), "entry")
         for d in m.get("dv") or []:
-            if d.get("keys"):
-                probe(
-                    join_uri(self.path(name), d["keys"]["dir"]), "dv-keys"
-                )
-            if d.get("pos"):
-                probe(
-                    join_uri(self.path(name), d["pos"]["dir"]), "dv-pos"
-                )
+            probe(join_uri(self.path(name), d["pos"]["dir"]), "dv-pos")
         if m.get("cdc"):
             probe(join_uri(self.path(name), m["cdc"]["dir"]), "cdc")
         live: set[str] = set()
@@ -1635,15 +1636,11 @@ class ManifestFormat(TableFormat):
             live |= {e["dir"] for e in mv["entries"]}
             if mv.get("cdc"):
                 live.add(mv["cdc"]["dir"])
-            for d in mv.get("dv") or []:
-                if d.get("keys"):
-                    live.add(d["keys"]["dir"])
-                if d.get("pos"):
-                    live.add(d["pos"]["dir"])
+            live |= {d["pos"]["dir"] for d in mv.get("dv") or []}
         on_disk = {
             d
             for d in self.fs.list_subdirs(self.path(name))
-            if d.startswith(("d-", "cdc-", "dvk-", "dvp-"))
+            if d.startswith(("d-", "cdc-", "dvp-"))
         }
         return {
             "table": name,
@@ -1771,17 +1768,16 @@ class ManifestFormat(TableFormat):
                 # read serves these instead of refusing across the
                 # rewrite
                 **({"cdc": cdc} if cdc else {}),
-                # merge-on-read DELETE predicates (Delta deletion
-                # vectors / Iceberg v2 equality deletes, as stored
-                # predicates): each {"bounds", "n", "applies"} filters
-                # the rows of the entries it APPLIES to at read time —
-                # zero data rewrite at delete time; COW verbs
-                # materialize and shed them per rewritten entry
+                # merge-on-read DELETE masks (Delta deletion vectors):
+                # each {"pos": {"dir", "n"}, "applies"} names the
+                # (file, row-index) pairs a read drops from the entries
+                # it APPLIES to — zero data rewrite at delete time; COW
+                # verbs materialize and shed them per rewritten entry
                 **({"dv": dv} if dv else {}),
                 # READER protocol features (Delta's readerFeatures): a
                 # reader that does not understand a listed feature must
                 # refuse the table rather than silently misread it —
-                # e.g. ignoring "dv" would serve deleted rows, and
+                # e.g. ignoring "dv-pos" would serve deleted rows, and
                 # ignoring "column-mapping" would serve a renamed
                 # column's old files as a separate NULL-padded column.
                 # Only features whose MISREAD is silent corruption list
@@ -1790,23 +1786,7 @@ class ManifestFormat(TableFormat):
                 **(
                     {"reader_features": feats}
                     if (
-                        feats := (
-                            (
-                                ["dv"]
-                                + (
-                                    ["dv-eq"]
-                                    if any("keys" in d for d in dv)
-                                    else []
-                                )
-                                + (
-                                    ["dv-pos"]
-                                    if any("pos" in d for d in dv)
-                                    else []
-                                )
-                            )
-                            if dv
-                            else []
-                        )
+                        feats := (["dv-pos"] if dv else [])
                         + (
                             ["column-mapping"]
                             if schema
@@ -2154,7 +2134,7 @@ class ManifestFormat(TableFormat):
                 if len(out) > 4 and out[4] is not None
                 else (prev or {}).get("constraints")
             )
-            # merge-on-read delete predicates carry from the head
+            # merge-on-read delete masks carry from the head
             # unless the edit supplies its own list ([] clears) — an
             # append dropping the head's dv would resurrect deleted
             # rows
@@ -2230,15 +2210,16 @@ class ManifestFormat(TableFormat):
             else:
                 self._attach_stats(name, dirname, entries, ())
             # write-time schema memo (r16): the dir just landed is
-            # immutable and parquet round-trips both type and
-            # nullability (nullable field -> optional -> inferred
-            # nullable, required -> non-null), so the frame's schema IS
-            # what mergeSchema inference would return — memoize it now
-            # and the FIRST read of the dir skips the footer-inference
-            # job too (r15's memo only covered re-reads).  Partitioned
-            # dirs are excluded: their read-back schema appends
-            # partition columns whose types depend on layout/inference
-            # settings, not on ``df.schema``.
+            # immutable, so memoizing the frame's schema now lets the
+            # FIRST read of the dir skip the footer-inference job too
+            # (r15's memo only covered re-reads).  The memo may keep a
+            # non-null field that cold inference reports nullable (a
+            # file-source read is all-nullable), but it only ever
+            # reaches ``reader.schema()``, and that read is all-nullable
+            # as well: the first read and a cold read serve one schema
+            # (pinned in tests).  Partitioned dirs are excluded: their
+            # read-back schema appends partition columns whose types
+            # depend on layout/inference settings, not on ``df.schema``.
             _dir_schema_put((target, (target,)), df.schema)
             return entries, []
         entries = []
@@ -2617,7 +2598,7 @@ class ManifestFormat(TableFormat):
             # schema no longer has)
             # dv restores EXACTLY too ([] clears when the restored
             # version had none — carrying the bad head's delete
-            # predicates would delete rows the restored version holds)
+            # masks would delete rows the restored version holds)
             return (
                 old["entries"],
                 old["partition_columns"],
@@ -2679,15 +2660,7 @@ class ManifestFormat(TableFormat):
         now = time.time()
         removed = 0
         for d in self.fs.list_subdirs(self.path(name)):
-            if (
-                not (
-                    d.startswith("d-")
-                    or d.startswith("cdc-")
-                    or d.startswith("dvk-")
-                    or d.startswith("dvp-")
-                )
-                or d in live
-            ):
+            if not d.startswith(("d-", "cdc-", "dvp-")) or d in live:
                 continue
             target = join_uri(self.path(name), d)
             if grace > 0 and (now - self.fs.mtime(target)) < grace:
@@ -2749,11 +2722,8 @@ class ManifestFormat(TableFormat):
             }
             if (m or {}).get("cdc"):
                 live.add(m["cdc"]["dir"])  # retained CDF data
-            for d in (m or {}).get("dv") or []:
-                if d.get("keys"):
-                    live.add(d["keys"]["dir"])  # equality-delete keys
-                if d.get("pos"):
-                    live.add(d["pos"]["dir"])  # positional delete masks
+            # positional delete masks
+            live |= {d["pos"]["dir"] for d in (m or {}).get("dv") or []}
         removed = self._sweep_data_dirs(name, live, writer_grace_s)
         keep_set = set(kept_versions)
         for f in self.fs.list_files(self._log_path(name)):
@@ -3178,11 +3148,10 @@ class ManifestFormat(TableFormat):
         Refusals (all loud): unknown/dropped column; ``new`` collides
         with a live column or ANY retired name (alias reuse would
         resurrect old physical data under the wrong field); ``old`` is
-        a partition column (physical layout), referenced by a CHECK
-        constraint (stored SQL text), or referenced by a live
-        merge-on-read delete (``materialize_deletes`` first — a stored
-        predicate on a renamed column would silently stop masking).
-        Returns the new head version."""
+        a partition column (physical layout) or referenced by a CHECK
+        constraint (stored SQL text).  Live merge-on-read delete masks
+        name (file, row-index) pairs, no column, so they keep masking
+        across the rename.  Returns the new head version."""
         import re as _re
 
         if old == new:
@@ -3230,16 +3199,6 @@ class ManifestFormat(TableFormat):
                         f"{cname!r} references {old!r}; drop and re-add "
                         "the constraint around the rename"
                     )
-            for d in head.get("dv") or []:
-                refs = set((d.get("bounds") or {}).keys())
-                if "col" in (d.get("keys") or {}):
-                    refs.add(d["keys"]["col"])
-                if old in refs:
-                    raise ValueError(
-                        f"rename_column on {name}: a live merge-on-read "
-                        f"delete references {old!r}; run "
-                        "materialize_deletes first"
-                    )
             fields = []
             for fj in schema["fields"]:
                 if fj["name"] == old:
@@ -3268,8 +3227,8 @@ class ManifestFormat(TableFormat):
         tombstones in the stored schema (``dropped`` metadata), reads
         exclude its physical data, and its name + aliases retire —
         re-adding any of them refuses (see :meth:`_schema_mapping`).
-        Same refusals as :meth:`rename_column` for partition/
-        constraint/MOR references, plus dropping the last live column.
+        Same refusals as :meth:`rename_column` for partition and
+        constraint references, plus dropping the last live column.
         Returns the new head version."""
         import re as _re
 
@@ -3309,16 +3268,6 @@ class ManifestFormat(TableFormat):
                         f"drop_column on {name}: CHECK constraint "
                         f"{cname!r} references {col!r}; drop the "
                         "constraint first"
-                    )
-            for d in head.get("dv") or []:
-                refs = set((d.get("bounds") or {}).keys())
-                if "col" in (d.get("keys") or {}):
-                    refs.add(d["keys"]["col"])
-                if col in refs:
-                    raise ValueError(
-                        f"drop_column on {name}: a live merge-on-read "
-                        f"delete references {col!r}; run "
-                        "materialize_deletes first"
                     )
             fields = [
                 (
@@ -4137,11 +4086,11 @@ class ManifestFormat(TableFormat):
             d: self.fs.tree_bytes(join_uri(self.path(name), d)) for d in dirs
         }
         small = {d for d, s in sizes.items() if s < target_file_bytes}
-        # dirs a merge-on-read delete predicate still applies to stay
-        # out of compaction: absorbing them would either resurrect
-        # deleted rows or silently materialize a predicate the change
-        # feed has no provenance for — materialize_deletes (or any COW
-        # verb touching them) clears the predicate first
+        # dirs a merge-on-read delete mask still applies to stay out
+        # of compaction: absorbing them would either resurrect deleted
+        # rows or silently materialize a mask the change feed has no
+        # provenance for — materialize_deletes (or any COW verb
+        # touching them) clears the mask first
         dv_idents = {
             a for d in (m.get("dv") or []) for a in (d.get("applies") or ())
         }
@@ -4438,7 +4387,7 @@ class ManifestFormat(TableFormat):
             # sources => the append-only feed REFUSES across this
             # rewrite (loud); an empty purge cdc lets read_changes_cdf
             # step across it (the logical content is unchanged: reads
-            # already applied the predicates).
+            # already applied the masks).
             cdc = self._land_cdc(
                 name,
                 df.limit(0).withColumn("_change_type", F.lit("purge")),
@@ -4715,7 +4664,7 @@ class ManifestFormat(TableFormat):
         if (since_m.get("dv") or []) != (to_m.get("dv") or []):
             raise ValueError(
                 f"read_changes({name}): the merge-on-read delete "
-                f"predicates changed between v{since_m['version']} and "
+                f"masks changed between v{since_m['version']} and "
                 f"v{to_m['version']} — rows were deleted (or deletes "
                 "materialized), so the delta is not an append feed; "
                 "additive consumers must resync, row-level consumers "
@@ -5112,11 +5061,11 @@ class ManifestFormat(TableFormat):
                 cond = cond & (F.col(c) <= F.lit(c_hi))
         return cond
 
-    # -- merge-on-read deletes (stored delete predicates) -----------------
+    # -- merge-on-read deletes (positional delete masks) -----------------
 
     @staticmethod
     def _dv_ident(e: dict) -> str:
-        """Stable entry identity for delete-predicate scoping."""
+        """Stable entry identity for delete-mask scoping."""
         import json
 
         return "|".join(
@@ -5124,73 +5073,21 @@ class ManifestFormat(TableFormat):
              json.dumps(e["partitions"], sort_keys=True))
         )
 
-    @staticmethod
-    def _dv_bounds_json(bounds: dict) -> dict:
-        """JSON-safe encoding of a ``{col: (lo, hi) | values}`` spec —
-        explicit range/in tags (a 2-element IN list is not a range).
-        Merge-on-read predicates persist in the manifest, so only
-        JSON-representable bound types are accepted; anything else
-        must use the copy-on-write mode."""
-        out = {}
-        for c, spec in bounds.items():
-            is_set = isinstance(spec, (list, set, frozenset))
-            vals = list(spec) if is_set else [spec[0], spec[1]]
-            # validate BEFORE any sort: mixed-type sets must raise the
-            # guidance error, not sorted()'s bare TypeError
-            for v in vals:
-                if v is None and is_set:
-                    # Column.isin([None]) matches NOTHING (SQL IN is
-                    # never true on NULL) — persisting it would silently
-                    # delete zero rows where the caller expected
-                    # NULL-key deletion
-                    raise TypeError(
-                        f"merge-on-read IN-set for {c!r} contains None "
-                        "— SQL IN never matches NULL; delete NULL keys "
-                        "with an explicit predicate via mode='cow'"
-                    )
-                if v is not None and not isinstance(v, (int, float, str, bool)):
-                    raise TypeError(
-                        f"merge-on-read delete bound for {c!r} is "
-                        f"{type(v).__name__} — not JSON-storable; use "
-                        "mode='cow'"
-                    )
-            if is_set and len({type(v) for v in vals}) > 1:
-                raise TypeError(
-                    f"merge-on-read IN-set for {c!r} mixes value types "
-                    "— not order-storable; use mode='cow'"
-                )
-            out[c] = {"in": sorted(vals)} if is_set else {"range": vals}
-        return out
-
-    @staticmethod
-    def _dv_bounds_spec(jb: dict) -> dict:
-        """The inverse of :meth:`_dv_bounds_json`."""
-        return {
-            c: (enc["in"] if "in" in enc else tuple(enc["range"]))
-            for c, enc in jb.items()
-        }
-
     def _read_with_dv(
         self, name: str, m: dict, entries: list, with_pos: bool = False
     ) -> DataFrame:
         """``_read_entries`` with the manifest's MERGE-ON-READ delete
-        predicates applied: entries group by the SET of predicates
-        that apply to them (driver-side, manifest-sized), each group
-        reads once and filters ``NOT(coalesce(pred, FALSE))`` per
-        applying predicate (SQL DELETE semantics: a NULL predicate
-        does not delete), groups union.  Entries no predicate applies
-        to — notably everything appended AFTER a delete — read
-        untouched, which is exactly Delta's per-file deletion-vector
-        scoping.
-
-        POSITIONAL masks (``dv_form='positional'``): a group whose dv
-        set includes a ``pos`` mask reads with the ``__dv_file`` /
-        ``__dv_pos`` identity attached and masks via ONE anti-join
-        against the union of its applying masks — the join is on two
-        cheap machine columns, independent of any data column, and
-        only the groups a mask actually names pay it.  ``with_pos``
-        keeps the identity columns on the returned frame (the MOR
-        write paths use it to compute new masks dv-aware)."""
+        masks applied (Delta deletion vectors): each mask lists
+        (file, row-index) pairs and APPLIES to the entries whose files
+        it names.  Entries group by the set of masks that apply to them
+        (driver-side, manifest-sized); a masked group reads with the
+        ``__dv_file`` / ``__dv_pos`` identity attached and drops its
+        masked rows via ONE anti-join against the union of its masks —
+        the join is on two cheap machine columns, independent of any
+        data column.  Entries no mask applies to — notably everything
+        appended AFTER a delete — read untouched.  ``with_pos`` keeps
+        the identity columns on the returned frame (the MOR write paths
+        build new masks from it)."""
         from pyspark.sql import functions as F
 
         dvs = m.get("dv") or []
@@ -5206,83 +5103,30 @@ class ManifestFormat(TableFormat):
             groups.setdefault(key, []).append(e)
         frames = []
         for key in sorted(groups, key=sorted):
-            need_pos = with_pos or any("pos" in dvs[i] for i in key)
             df = self._read_entries(
-                name, m, groups[key], with_pos=need_pos
+                name, m, groups[key], with_pos=with_pos or bool(key)
             )
-            pos_masks = []
-            for i in sorted(key):
-                if "pos" in dvs[i]:
-                    pos_masks.append(
-                        self.spark.read.parquet(
-                            join_uri(
-                                self.path(name), dvs[i]["pos"]["dir"]
-                            )
-                        ).select(
-                            F.col("file").alias("__dv_file"),
-                            F.col("pos").alias("__dv_pos"),
-                        )
-                    )
-                    continue
-                if "keys" in dvs[i]:
-                    # EQUALITY-DELETE key file (Iceberg v2 equality
-                    # deletes): rows whose key appears in the landed
-                    # key set are masked by an anti-join — the
-                    # merge-on-read form of MERGE's matched-key delete.
-                    # Files predating the key column read without it:
-                    # NULL never equals a key (SQL semantics), so the
-                    # join would be a provable no-op and referencing
-                    # the absent column would fail analysis instead.
-                    kcol = dvs[i]["keys"]["col"]
-                    if kcol not in df.columns:
-                        continue
-                    kf = self.spark.read.parquet(
-                        join_uri(self.path(name), dvs[i]["keys"]["dir"])
-                    ).select(kcol)
-                    # SIZE-GATED broadcast hint (r12): AQE does not
-                    # reliably convert this anti-join at runtime
-                    # (measured: a full shuffle of the fact side
-                    # against a 1-row mask), so hint when the landed
-                    # key count proves the side tiny; a huge backfill
-                    # batch (or a pre-r12 entry with no count) still
-                    # degrades to a shuffle join instead of dying on
-                    # the broadcast ceiling
-                    kn = dvs[i]["keys"].get("n")
-                    if kn is not None and kn <= self.DV_BROADCAST_ROWS:
-                        kf = F.broadcast(kf)
-                    df = df.join(kf, kcol, "left_anti")
-                    continue
-                spec = self._dv_bounds_spec(dvs[i]["bounds"])
-                # a group whose files PREDATE a bound column (additive
-                # schema evolution) reads without it: those rows are
-                # NULL there, and SQL DELETE semantics never delete on
-                # a NULL predicate — the filter is a provable no-op,
-                # and referencing the absent column would instead fail
-                # analysis for the whole read
-                if any(c not in df.columns for c in spec):
-                    continue
-                cond = self._bounds_condition(spec)
-                df = df.filter(~F.coalesce(cond, F.lit(False)))
-            if pos_masks:
-                mask = pos_masks[0]
-                for pm in pos_masks[1:]:
-                    mask = mask.unionByName(pm)
-                # deletes are idempotent, so the UNION of applying
-                # masks in one anti-join ≡ applying each in turn.
-                # Size-gated broadcast hint from the STORED mask
-                # counts (see the equality branch); an unknown or huge
-                # total degrades to a shuffle join
-                total = 0
-                for i in sorted(key):
-                    if "pos" in dvs[i]:
-                        n = dvs[i]["pos"].get("n")
-                        total = None if (total is None or n is None) \
-                            else total + n
-                if total is not None and total <= self.DV_BROADCAST_ROWS:
+            if key:
+                masks = [dvs[i]["pos"] for i in sorted(key)]
+                # explicit schema: no footer-inference job per read.
+                # Deletes are idempotent, so the UNION of applying
+                # masks in one anti-join ≡ applying each in turn
+                mask = self.spark.read.schema(_DV_MASK_SCHEMA).parquet(
+                    *[join_uri(self.path(name), p["dir"]) for p in masks]
+                ).select(
+                    F.col("file").alias("__dv_file"),
+                    F.col("pos").alias("__dv_pos"),
+                )
+                # SIZE-GATED broadcast hint from the stored mask counts:
+                # AQE does not reliably convert this anti-join at
+                # runtime (measured: a full shuffle of the fact side
+                # against a 1-row mask); a huge mask degrades to a
+                # shuffle join instead of dying on the broadcast ceiling
+                if sum(p["n"] for p in masks) <= self.DV_BROADCAST_ROWS:
                     mask = F.broadcast(mask)
                 df = df.join(mask, ["__dv_file", "__dv_pos"], "left_anti")
-            if need_pos and not with_pos:
-                df = df.drop("__dv_file", "__dv_pos")
+                if not with_pos:
+                    df = df.drop("__dv_file", "__dv_pos")
             frames.append(df)
         out = frames[0]
         for f in frames[1:]:
@@ -5293,7 +5137,7 @@ class ManifestFormat(TableFormat):
     def _dv_without(cls, dvs: list | None, removed: set) -> list:
         """The dv list after a COW rewrite of the entries in
         ``removed`` (idents): rewritten entries materialized their
-        deletes, so they leave every applies set; a predicate that no
+        deletes, so they leave every applies set; a mask that no
         longer applies to anything drops entirely — dv lists are
         self-cleaning under rewrites."""
         out = []
@@ -5321,63 +5165,40 @@ class ManifestFormat(TableFormat):
     def _delete_where_mor_once(
         self, name: str, col: str | dict, lo=None, hi=None
     ) -> int:
-        """Row-level DELETE as MERGE-ON-READ (Delta deletion vectors /
-        Iceberg v2 equality deletes, expressed as a stored predicate):
-        NO data file is rewritten — the commit records the predicate,
-        scoped to the entries that may contain matches, and every read
-        applies it.  The write cost of a narrow delete drops from
-        O(touched files) to O(one manifest) — the right verb when the
-        matched files are large and reads can afford one more codegen
-        filter.  Matched rows still land as CDC (the count and the
-        change feed need them — one bounded scan, like COW).
+        """Row-level DELETE as MERGE-ON-READ (Delta deletion vectors):
+        NO data file is rewritten — the commit records a (file,
+        row-index) MASK of the matched rows, scoped to the entries
+        whose files hold them, and every read drops the masked rows.
+        The write cost of a narrow delete drops from O(touched files)
+        to one scan of the candidates — the right verb when the matched
+        files are large and reads can afford one more anti-join.  Any
+        predicate works (nothing persists but positions).  The mask
+        write observes the delete count and the masked files; matched
+        rows also land as CDC when the format records it.
 
         Semantics: point-in-time — rows appended AFTER this commit are
-        NOT affected even if they match (the predicate applies only to
-        entries present now; Delta DVs scope per file the same way).
+        NOT affected even if they match (the mask names only files
+        present now; Delta DVs scope per file the same way).
         COW verbs (delete/update/merge/cluster/replace) MATERIALIZE
-        applying predicates for every entry they rewrite and shed them
+        applying masks for every entry they rewrite and shed them
         from the manifest; ``materialize_deletes`` does it on demand;
-        threshold compaction skips predicate-bearing dirs until then.
-        Returns the number of rows deleted.
-
-        ``dv_form='positional'`` (r12, VERDICT r11 task 2) stores a
-        (file, row-index) MASK instead of the predicate — Delta's
-        deletion-vector design: reads mask via one anti-join on two
-        machine columns scoped to the files that actually contain
-        deleted rows (vs the predicate form filtering every may-match
-        dir), and non-JSON-storable predicates work too (nothing
-        persists but positions)."""
+        threshold compaction skips masked dirs until then.
+        Returns the number of rows deleted."""
         from pyspark.sql import functions as F
 
         bounds = col if isinstance(col, dict) else {col: (lo, hi)}
-        positional = self.dv_form == "positional"
-        # validate FIRST: no cdc orphan (the positional form persists
-        # no predicate, so nothing to validate)
-        jb = None if positional else self._dv_bounds_json(bounds)
         candidates, m = self.prune_entries(name, bounds)
         if not m["entries"] or not candidates:
             return 0
-        cand_df = self._read_with_dv(name, m, candidates, with_pos=positional)
-        cond = F.coalesce(self._bounds_condition(bounds), F.lit(False))
-        if positional:
-            entry, n_deleted = self._pos_dv_entry(
-                name, cand_df.filter(cond), candidates
-            )
-            if n_deleted == 0:
-                return 0
-        else:
-            n_deleted = cand_df.filter(cond).count()
-            if n_deleted == 0:
-                return 0
-            entry = {
-                "bounds": jb,
-                "n": int(n_deleted),
-                "applies": [self._dv_ident(e) for e in candidates],
-            }
+        matched = self._read_with_dv(
+            name, m, candidates, with_pos=True
+        ).filter(F.coalesce(self._bounds_condition(bounds), F.lit(False)))
+        entry, n_deleted = self._land_dv_pos(name, matched, candidates)
+        if n_deleted == 0:
+            return 0
         cdc = self._land_cdc(
             name,
-            cand_df.filter(cond)
-            .drop("__dv_file", "__dv_pos")
+            matched.drop("__dv_file", "__dv_pos")
             .withColumn("_change_type", F.lit("delete")),
             n_deleted, "delete", m["version"],
         )
@@ -5394,7 +5215,6 @@ class ManifestFormat(TableFormat):
         )
         self._maybe_purge_dvs(name, dv)
         return n_deleted
-
 
     def _maybe_purge_dvs(self, name: str, dv: list) -> None:
         """The ``auto_purge_dvs`` policy: one bounded rewrite when the
@@ -5413,8 +5233,8 @@ class ManifestFormat(TableFormat):
         )
 
     def _materialize_deletes_once(self, name: str) -> int:
-        """COW-rewrite every entry a merge-on-read delete predicate
-        still applies to, and clear the predicates — the explicit
+        """COW-rewrite every entry a merge-on-read delete mask still
+        applies to, and clear the masks — the explicit
         maintenance verb that converts read-time filter debt back into
         clean files (Delta's PURGE).  Bounded by the applying entries,
         never the table.  Returns the number of entries rewritten."""
@@ -5448,7 +5268,7 @@ class ManifestFormat(TableFormat):
         from pyspark.sql import functions as F
 
         # the purge is row-preserving (reads already applied the
-        # predicates), but the rewritten entries carry no compaction
+        # masks), but the rewritten entries carry no compaction
         # provenance — an empty cdc marker lets read_changes_cdf step
         # across it as a zero-row change instead of refusing forever;
         # the append-only feed still refuses (dv list flips [P] -> []),
@@ -5517,7 +5337,7 @@ class ManifestFormat(TableFormat):
             for e in m["entries"]
             if (e["dir"], e.get("rel"), str(e["partitions"])) not in cand_ids
         ]
-        # dv-aware: rows a merge-on-read predicate already deleted must
+        # dv-aware: rows a merge-on-read mask already deleted must
         # not be re-counted, and must NOT resurrect in the rewrite
         cand_df = self._read_with_dv(name, m, candidates)
         cond = F.coalesce(self._bounds_condition(bounds), F.lit(False))
@@ -5768,108 +5588,18 @@ class ManifestFormat(TableFormat):
         correct-but-full rewrite (every entry is a may-match candidate);
         declare the key in ``stats_cols`` and cluster on it for the
         bounded behavior."""
-        from pyspark.sql import functions as F
-
-        prev = self._manifest(name)
-        if prev is None or (
-            not prev["entries"] and not prev.get("segments")
-        ):
-            # absent/empty target: the batch IS the table
-            self.replace_atomic(name, df, (), txn=txn_update)
-            return
-        key_src = delete_keys if delete_keys is not None else df
-        keys = key_src.select(unique_key).distinct()
-        # min/max are distinct-insensitive: aggregate the raw key column
-        # so the range probe skips the dedup exchange (r15 optimization)
-        row = key_src.select(unique_key).agg(
-            F.min(unique_key).alias("mn"), F.max(unique_key).alias("mx")
-        ).first()
-        lo, hi = row["mn"], row["mx"]
-        # prune against the ALREADY-READ head (one manifest resolve per
-        # merge — this is the 15-minute hot path — and no TOCTOU window
-        # between the emptiness check and the pruned snapshot); stats
-        # consult the key's aliases too (column mapping)
-        m = prev
-        key_names = self._match_names(m, unique_key)
-        candidates = (
-            [
-                e
-                for e in m["entries"]
-                if all(
-                    self._entry_may_match(e, n, lo, hi) for n in key_names
-                )
-            ]
-            if lo is not None
-            else []
+        front = self._merge_front(
+            name, df, unique_key, delete_keys, txn_update,
+            with_pos=False,
+            # persisted: the emptiness probe starts materializing it,
+            # and the CDC classification re-reads the CACHE instead of
+            # paying a second scan of the candidate files — the matched
+            # set is batch-key-bounded, never candidate-sized
+            persist=self.cdf and record_cdc,
         )
-        has_match = False
-        matched = None
-        if candidates:
-            cand_df = self._read_with_dv(name, m, candidates)
-            matched = cand_df.join(keys, unique_key, "left_semi")
-            if self.cdf and record_cdc:
-                # persisted: the emptiness probe below starts
-                # materializing it, and the CDC classification re-reads
-                # the CACHE instead of paying a second scan of the
-                # candidate files — the matched set is batch-key-
-                # bounded, never candidate-sized
-                matched = matched.persist()
-            # boolean probe, not a count: the common case (some key
-            # matches) short-circuits at the first matched row instead
-            # of scanning every candidate (the CDC row count, when
-            # recording is on, comes from the landed footers)
-            has_match = not matched.isEmpty()
-        key_reads = (
-            (
-                lambda e: all(
-                    self._entry_may_match(e, n, lo, hi) for n in key_names
-                )
-            )
-            if lo is not None
-            else None
-        )
-        if not has_match:
-            if matched is not None and self.cdf and record_cdc:
-                matched.unpersist()
-            if df.isEmpty():
-                # delete-only merge with nothing to delete: no data
-                # commit, but a cursor advance still lands (metadata
-                # only) — an empty delta must not stall its writer
-                if txn_update:
-                    self.set_txn(name, txn_update)
-                return
-            # no target row carries a batch key: the merge degrades to
-            # an append of the batch — but NOT a blind one: the no-match
-            # conclusion was computed against this snapshot, so a
-            # concurrent append whose stats overlap the key range must
-            # conflict (its matching rows would be upsert targets in
-            # the serial schedule; plain self.write would rebase past
-            # them and leave duplicate keys).  Stats-disjoint
-            # concurrent commits rebase inside the commit as usual.
-            app_schema = self._enforce_append_schema(name, m, df)
-            if app_schema is None:
-                app_schema = df.schema.jsonValue()
-            app_cols = tuple(m["partition_columns"])
-            app_new, _ = self._new_data_dir(name, df, app_cols)
-            if app_new:
-                self._enforce_constraints(
-                    name, m, join_uri(self.path(name), app_new[0]["dir"])
-                )
-            self._commit(
-                name, m["entries"] + app_new, list(app_cols),
-                m["version"], schema=app_schema, txn=m.get("txn"),
-                dv=m.get("dv"), txn_update=txn_update,
-                conflict={
-                    "base": m, "touched": set(), "removed": set(),
-                    "produced": app_new, "reads": key_reads,
-                },
-            )
+        if front is None:
             return
-        # write-time schema guard BEFORE landing (same contract as
-        # append: additive evolution ok, type change refuses loudly)
-        merged_schema = self._enforce_append_schema(name, m, df)
-        if merged_schema is None:
-            merged_schema = df.schema.jsonValue()
+        m, keys, candidates, cand_df, matched, key_reads, merged_schema = front
         cand_ids = {
             (e["dir"], e.get("rel"), str(e["partitions"])) for e in candidates
         }
@@ -5904,6 +5634,119 @@ class ManifestFormat(TableFormat):
                 "produced": new, "reads": key_reads,
             },
         )
+
+    def _merge_front(
+        self,
+        name: str,
+        df: DataFrame,
+        unique_key: str,
+        delete_keys: DataFrame | None,
+        txn_update: dict | None,
+        with_pos: bool,
+        persist: bool,
+    ) -> tuple | None:
+        """The half of MERGE the copy-on-write and merge-on-read forms
+        share.  Returns None when the merge is already done: an absent
+        or empty target is replaced by the batch, and a merge no target
+        row matches either advances its writer's cursor (empty batch)
+        or lands the batch as a conflict-checked append.  Otherwise
+        returns ``(m, keys, candidates, cand_df, matched, key_reads,
+        merged_schema)`` for the caller's write half; ``matched`` is
+        persisted when ``persist`` (the caller unpersists it), and
+        ``with_pos`` reads the candidates with their row identity."""
+        from pyspark.sql import functions as F
+
+        prev = self._manifest(name)
+        if prev is None or (
+            not prev["entries"] and not prev.get("segments")
+        ):
+            # absent/empty target: the batch IS the table
+            self.replace_atomic(name, df, (), txn=txn_update)
+            return None
+        key_src = delete_keys if delete_keys is not None else df
+        keys = key_src.select(unique_key).distinct()
+        # min/max are distinct-insensitive: aggregate the raw key column
+        # so the range probe skips the dedup exchange (r15 optimization)
+        row = key_src.select(unique_key).agg(
+            F.min(unique_key).alias("mn"), F.max(unique_key).alias("mx")
+        ).first()
+        lo, hi = row["mn"], row["mx"]
+        # prune against the ALREADY-READ head (one manifest resolve per
+        # merge — this is the 15-minute hot path — and no TOCTOU window
+        # between the emptiness check and the pruned snapshot); stats
+        # consult the key's aliases too (column mapping)
+        m = prev
+        key_names = self._match_names(m, unique_key)
+        key_reads = (
+            (
+                lambda e: all(
+                    self._entry_may_match(e, n, lo, hi) for n in key_names
+                )
+            )
+            if lo is not None
+            else None
+        )
+        candidates = (
+            [e for e in m["entries"] if key_reads(e)]
+            if key_reads is not None
+            else []
+        )
+        has_match = False
+        cand_df = matched = None
+        if candidates:
+            cand_df = self._read_with_dv(
+                name, m, candidates, with_pos=with_pos
+            )
+            matched = cand_df.join(keys, unique_key, "left_semi")
+            if persist:
+                matched = matched.persist()
+            # boolean probe, not a count: the common case (some key
+            # matches) short-circuits at the first matched row instead
+            # of scanning every candidate
+            has_match = not matched.isEmpty()
+        if not has_match:
+            if matched is not None and persist:
+                matched.unpersist()
+            if df.isEmpty():
+                # delete-only merge with nothing to delete: no data
+                # commit, but a cursor advance still lands (metadata
+                # only) — an empty delta must not stall its writer
+                if txn_update:
+                    self.set_txn(name, txn_update)
+                return None
+            # no target row carries a batch key: the merge degrades to
+            # an append of the batch — but NOT a blind one: the no-match
+            # conclusion was computed against this snapshot, so a
+            # concurrent append whose stats overlap the key range must
+            # conflict (its matching rows would be upsert targets in
+            # the serial schedule; plain self.write would rebase past
+            # them and leave duplicate keys).  Stats-disjoint
+            # concurrent commits rebase inside the commit as usual.
+            app_schema = self._enforce_append_schema(name, m, df)
+            if app_schema is None:
+                app_schema = df.schema.jsonValue()
+            app_cols = tuple(m["partition_columns"])
+            app_new, _ = self._new_data_dir(name, df, app_cols)
+            if app_new:
+                self._enforce_constraints(
+                    name, m, join_uri(self.path(name), app_new[0]["dir"])
+                )
+            self._commit(
+                name, m["entries"] + app_new, list(app_cols),
+                m["version"], schema=app_schema, txn=m.get("txn"),
+                dv=m.get("dv"), txn_update=txn_update,
+                conflict={
+                    "base": m, "touched": set(), "removed": set(),
+                    "produced": app_new, "reads": key_reads,
+                },
+            )
+            return None
+        # write-time schema guard BEFORE landing (same contract as
+        # append: additive evolution ok, type change refuses loudly)
+        merged_schema = self._enforce_append_schema(name, m, df)
+        if merged_schema is None:
+            merged_schema = df.schema.jsonValue()
+        return m, keys, candidates, cand_df, matched, key_reads, merged_schema
 
     def _merge_cdc(
         self, name: str, df: DataFrame, matched: DataFrame,
@@ -5949,93 +5792,47 @@ class ManifestFormat(TableFormat):
         changed = pre.unionByName(post, allowMissingColumns=True)
         return self._land_cdc(name, changed, None, "merge", base_version)
 
-    def _land_dv_keys(self, name: str, keys: DataFrame, col: str) -> str:
-        """Land an equality-delete KEY FILE (Iceberg v2 equality
-        deletes): the distinct key set a merge-on-read MERGE masks,
-        written once under the table path like cdc dirs — vacuum keeps
-        it alive while any retained version's dv references it."""
-        import uuid
-
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        dirname = f"dvk-{uuid.uuid4().hex}"
-        target = join_uri(self.path(name), dirname)
-        # the row count rides the WRITE itself (Observation — no
-        # second job): it lets the read side size-gate a broadcast
-        # hint on the anti-join (AQE does not reliably convert a
-        # derived-column anti-join at runtime — measured as a full
-        # shuffle of the fact side against a 1-row mask)
-        obs = Observation()
-        keys.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-            "overwrite"
-        ).parquet(target)
-        return dirname, int(obs.get["n"])
-
-    def _land_dv_pos(self, name: str, matched: DataFrame) -> tuple[str, int]:
+    def _land_dv_pos(
+        self, name: str, matched: DataFrame, candidates: list
+    ) -> tuple[dict | None, int]:
         """Land a POSITIONAL delete mask (Delta deletion vectors /
         Iceberg positional deletes): the (file, row-index) pairs of
         ``matched`` rows — which must carry the ``__dv_file`` /
         ``__dv_pos`` identity from a ``with_pos`` read — written once
-        under the table path like key files.  Returns (dirname, row
-        count); the count rides the write itself (Observation — no
-        second job), so mask landing + exact delete count is ONE scan
-        of the candidates.  A zero-row mask leaves an orphan dir
-        vacuum's age-guarded sweep reclaims (the caller skips the
-        commit)."""
+        under the table path like cdc dirs.  Returns (dv entry, row
+        count), or (None, 0) when nothing matched.  The count and the
+        set of masked files ride the write itself (Observation — no
+        second job): the entry APPLIES only to the ``candidates`` whose
+        files the mask names, so untouched dirs neither pay the
+        read-time anti-join nor get skipped by threshold compaction.
+        A zero-row mask leaves an orphan dir vacuum's age-guarded sweep
+        reclaims (the caller skips the commit)."""
         import uuid
 
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
         dirname = f"dvp-{uuid.uuid4().hex}"
-        target = join_uri(self.path(name), dirname)
         obs = Observation()
         matched.select(
             F.col("__dv_file").alias("file"), F.col("__dv_pos").alias("pos")
-        ).observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-            "overwrite"
-        ).parquet(target)
-        return dirname, int(obs.get["n"])
-
-    def _pos_applies(self, name: str, candidates: list, dirname: str) -> list:
-        """Scope a positional dv to the entries whose files the mask
-        ACTUALLY names — finer than the equality form's may-match
-        scoping, so untouched dirs neither pay the read-time anti-join
-        nor get skipped by threshold compaction.  Driver cost is one
-        distinct-collect of masked file paths (bounded by files
-        containing deleted rows, never the table)."""
-        files = [
-            r["file"]
-            for r in self.spark.read.parquet(
-                join_uri(self.path(name), dirname)
-            )
-            .select("file")
-            .distinct()
-            .collect()
-        ]
-        out = []
+        ).observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.collect_set("file").alias("files"),
+        ).write.mode("overwrite").parquet(join_uri(self.path(name), dirname))
+        n = int(obs.get["n"])
+        if n == 0:
+            return None, 0
+        files = obs.get["files"]
+        applies = []
         for e in candidates:
             prefix = e["dir"] + "/" + (
                 e["rel"] + "/" if e.get("rel") else ""
             )
             if any(f.startswith(prefix) for f in files):
-                out.append(self._dv_ident(e))
-        return out
-
-    def _pos_dv_entry(
-        self, name: str, matched: DataFrame, candidates: list
-    ) -> tuple[dict | None, int]:
-        """Land a positional mask for ``matched`` (a ``with_pos``
-        frame) and build its dv entry — (None, 0) when nothing
-        matched."""
-        dirname, n = self._land_dv_pos(name, matched)
-        if n == 0:
-            return None, 0
-        return {
-            "pos": {"dir": dirname, "n": n},
-            "applies": self._pos_applies(name, candidates, dirname),
-        }, n
+                applies.append(self._dv_ident(e))
+        return {"pos": {"dir": dirname, "n": n}, "applies": applies}, n
 
     def merge_mor(
         self,
@@ -6068,114 +5865,42 @@ class ManifestFormat(TableFormat):
         txn_update: dict | None = None,
     ) -> None:
         """MERGE as MERGE-ON-READ (VERDICT r10 task 5 — Delta's
-        DV-backed MERGE / Iceberg v2 equality deletes): the batch
-        APPENDS as one fresh dir, the matched-key delete becomes a
-        stored equality-delete key file scoped to the may-match
-        entries, and NO existing data file is rewritten — write cost
-        is O(batch), independent of touched-file SIZE, where the
+        DV-backed MERGE): the batch APPENDS as one fresh dir, the
+        matched keys' old rows become a positional delete mask scoped
+        to the files that hold them, and NO existing data file is
+        rewritten — write cost is O(batch) plus one scan of the
+        candidates, independent of touched-file SIZE, where the
         copy-on-write :meth:`merge` re-lands every may-match entry's
-        surviving rows.  Reads apply the key mask as an anti-join
+        surviving rows.  Reads drop the masked rows with one anti-join
         (``_read_with_dv``); ``materialize_deletes`` / compaction
         convert the debt back into clean files on the maintenance
         cadence, exactly like MOR deletes.
 
-        Same semantics as :meth:`merge`: ``delete_keys`` overrides the
-        delete set (root-key merges), matched keys' old rows disappear,
-        batch rows serve, CDC classes record identically when
-        ``cdf=True``, writer watermarks carry, and a no-match merge
-        degrades to a plain rebaseable append.  Same loud-abort
-        concurrency contract (the key mask was computed against a
-        snapshot).  The right verb when matched files are LARGE and
-        the batch is small — the reference's 15-minute M2 cadence
-        against year-old clustered history.
+        Same semantics as :meth:`merge` (the two share
+        :meth:`_merge_front`): ``delete_keys`` overrides the delete set
+        (root-key merges), matched keys' old rows disappear, batch rows
+        serve, CDC classes record identically when ``cdf=True``, writer
+        watermarks carry, and a no-match merge degrades to a plain
+        rebaseable append.  Same loud-abort concurrency contract (the
+        mask was computed against a snapshot).  The right verb when
+        matched files are LARGE and the batch is small — the
+        reference's 15-minute M2 cadence against year-old clustered
+        history.
 
         Unattended cadences should set ``auto_purge_dvs``: every MOR
-        merge adds one key mask, masked dirs are skipped by threshold
+        merge adds one mask, masked dirs are skipped by threshold
         compaction until purged, so without the policy (or explicit
         ``materialize_deletes`` on a maintenance cadence) read
         amplification grows with the sync count."""
-        from pyspark.sql import functions as F
-
-        prev = self._manifest(name)
-        if prev is None or (
-            not prev["entries"] and not prev.get("segments")
-        ):
-            self.replace_atomic(name, df, (), txn=txn_update)
-            return
-        key_src = delete_keys if delete_keys is not None else df
-        keys = key_src.select(unique_key).distinct()
-        # min/max are distinct-insensitive: aggregate the raw key column
-        # so the range probe skips the dedup exchange (r15 optimization)
-        row = key_src.select(unique_key).agg(
-            F.min(unique_key).alias("mn"), F.max(unique_key).alias("mx")
-        ).first()
-        lo, hi = row["mn"], row["mx"]
-        m = prev
-        key_names = self._match_names(m, unique_key)
-        candidates = (
-            [
-                e
-                for e in m["entries"]
-                if all(
-                    self._entry_may_match(e, n, lo, hi) for n in key_names
-                )
-            ]
-            if lo is not None
-            else []
+        # matched is always persisted: the mask write and the CDC
+        # classification both re-read it
+        front = self._merge_front(
+            name, df, unique_key, delete_keys, txn_update,
+            with_pos=True, persist=True,
         )
-        positional = self.dv_form == "positional"
-        has_match = False
-        matched = None
-        if candidates:
-            cand_df = self._read_with_dv(
-                name, m, candidates, with_pos=positional
-            )
-            matched = cand_df.join(keys, unique_key, "left_semi")
-            if positional or (self.cdf and record_cdc):
-                matched = matched.persist()
-            has_match = not matched.isEmpty()
-        key_reads = (
-            (
-                lambda e: all(
-                    self._entry_may_match(e, n, lo, hi) for n in key_names
-                )
-            )
-            if lo is not None
-            else None
-        )
-        if not has_match:
-            if matched is not None and (
-                positional or (self.cdf and record_cdc)
-            ):
-                matched.unpersist()
-            if df.isEmpty():
-                if txn_update:
-                    self.set_txn(name, txn_update)  # as in merge
-                return
-            # degraded append — conflict-checked against the key range,
-            # same reasoning as the COW form's degraded path
-            app_schema = self._enforce_append_schema(name, m, df)
-            if app_schema is None:
-                app_schema = df.schema.jsonValue()
-            app_cols = tuple(m["partition_columns"])
-            app_new, _ = self._new_data_dir(name, df, app_cols)
-            if app_new:
-                self._enforce_constraints(
-                    name, m, join_uri(self.path(name), app_new[0]["dir"])
-                )
-            self._commit(
-                name, m["entries"] + app_new, list(app_cols),
-                m["version"], schema=app_schema, txn=m.get("txn"),
-                dv=m.get("dv"), txn_update=txn_update,
-                conflict={
-                    "base": m, "touched": set(), "removed": set(),
-                    "produced": app_new, "reads": key_reads,
-                },
-            )
+        if front is None:
             return
-        merged_schema = self._enforce_append_schema(name, m, df)
-        if merged_schema is None:
-            merged_schema = df.schema.jsonValue()
+        m, _, candidates, _, matched, key_reads, merged_schema = front
         cols = tuple(m["partition_columns"])
         # the ONLY data write: the batch itself (a delete-only merge —
         # empty batch — lands no data dir at all)
@@ -6186,18 +5911,7 @@ class ManifestFormat(TableFormat):
                 self._enforce_constraints(
                     name, m, join_uri(self.path(name), new[0]["dir"])
                 )
-        if positional:
-            # Delta's DV-backed MERGE: the mask names exactly the rows
-            # the matched keys occupy — files without a matched key
-            # read CLEAN (no anti-join), where the equality form makes
-            # every may-match dir pay the key-file anti-join forever
-            entry, _n = self._pos_dv_entry(name, matched, candidates)
-        else:
-            keys_dir, n_keys = self._land_dv_keys(name, keys, unique_key)
-            entry = {
-                "keys": {"col": unique_key, "dir": keys_dir, "n": n_keys},
-                "applies": [self._dv_ident(e) for e in candidates],
-            }
+        entry, _ = self._land_dv_pos(name, matched, candidates)
         dv = (m.get("dv") or []) + [entry]
         cdc = None
         if self.cdf and record_cdc:
@@ -6205,8 +5919,7 @@ class ManifestFormat(TableFormat):
                 name, df, matched.drop("__dv_file", "__dv_pos"),
                 unique_key, m["version"],
             )
-        if positional or (self.cdf and record_cdc):
-            matched.unpersist()
+        matched.unpersist()
         self._commit(
             name, m["entries"] + new, list(cols), m["version"],
             schema=merged_schema, cdc=cdc, txn=m.get("txn"), dv=dv,
@@ -6247,35 +5960,31 @@ class ManifestFormat(TableFormat):
         hi=None,
     ) -> int:
         """Row-level UPDATE as MERGE-ON-READ (VERDICT r10 task 5): the
-        POSTIMAGE rows append as one fresh dir and the predicate
-        becomes a stored delete scoped to the may-match entries —
-        matched old rows mask at read time, survivors are NEVER
+        POSTIMAGE rows append as one fresh dir and the matched old rows
+        become a positional delete mask — survivors are NEVER
         rewritten, so write cost is O(matched rows) where the
         copy-on-write :meth:`update_where` pays O(candidate entries'
         full content).  Same SET validation, CHECK-constraint
         enforcement, SQL NULL-predicate semantics, CDC classes, and
         return value as the COW form; ``materialize_deletes`` clears
-        the debt.  Note the dv predicate is applies-scoped to the
-        entries present NOW, so the postimage dir (and later appends)
-        are untouched even when a SET keeps a row inside the predicate
-        range."""
+        the debt.  The mask lands first and its write observes the
+        update count.  It names only files present NOW, so the
+        postimage dir (and later appends) are untouched even when a SET
+        keeps a row inside the predicate range."""
         from pyspark.sql import functions as F
 
         bounds = col if isinstance(col, dict) else {col: (lo, hi)}
-        positional = self.dv_form == "positional"
-        # validate FIRST: no orphan (positional persists no predicate)
-        jb = None if positional else self._dv_bounds_json(bounds)
         candidates, m = self.prune_entries(name, bounds)
         if not m["entries"] or not candidates:
             return 0
-        cand_df = self._read_with_dv(name, m, candidates, with_pos=positional)
+        cand_df = self._read_with_dv(name, m, candidates, with_pos=True)
         base_cols = [
             c for c in cand_df.columns if c not in ("__dv_file", "__dv_pos")
         ]
         self._validate_set_exprs(name, cand_df, set_exprs, "update_where_mor")
         cond = F.coalesce(self._bounds_condition(bounds), F.lit(False))
         matched = cand_df.filter(cond)
-        n_updated = matched.count()
+        entry, n_updated = self._land_dv_pos(name, matched, candidates)
         if n_updated == 0:
             return 0
         # postimage = SET applied UNCONDITIONALLY to matched rows (the
@@ -6308,14 +6017,6 @@ class ManifestFormat(TableFormat):
             self._enforce_constraints(
                 name, m, join_uri(self.path(name), new[0]["dir"])
             )
-        if positional:
-            entry, _n = self._pos_dv_entry(name, matched, candidates)
-        else:
-            entry = {
-                "bounds": jb,
-                "n": int(n_updated),
-                "applies": [self._dv_ident(e) for e in candidates],
-            }
         dv = (m.get("dv") or []) + [entry]
         self._commit(
             name, m["entries"] + new, list(m["partition_columns"]),
@@ -6384,7 +6085,6 @@ class CatalogManifestFormat(ManifestFormat):
         cluster_by: str | None = None,
         cdf: bool = False,
         auto_purge_dvs: int | None = None,
-        dv_form: str = "equality",
         bloom_cols: tuple[str, ...] = (),
         log_store: LogStore | None = None,
     ):
@@ -6392,7 +6092,7 @@ class CatalogManifestFormat(ManifestFormat):
             spark, root,
             auto_compact_dirs=auto_compact_dirs, stats_cols=stats_cols,
             segment_entries=segment_entries, cluster_by=cluster_by,
-            cdf=cdf, auto_purge_dvs=auto_purge_dvs, dv_form=dv_form,
+            cdf=cdf, auto_purge_dvs=auto_purge_dvs,
             bloom_cols=bloom_cols, log_store=log_store,
         )
         self._pending: dict[str, int] | None = None
@@ -6412,7 +6112,6 @@ class CatalogManifestFormat(ManifestFormat):
             cluster_by=self.cluster_by,
             cdf=self.cdf,
             auto_purge_dvs=self.auto_purge_dvs,
-            dv_form=self.dv_form,
             bloom_cols=self.bloom_cols,
             # the SAME LogStore instance: an arbitrated backend's claim
             # state must be shared by every writer of the warehouse
@@ -7098,11 +6797,8 @@ class CatalogManifestFormat(ManifestFormat):
             }
             if (m or {}).get("cdc"):
                 live.add(m["cdc"]["dir"])  # retained CDF data
-            for d in (m or {}).get("dv") or []:
-                if d.get("keys"):
-                    live.add(d["keys"]["dir"])  # equality-delete keys
-                if d.get("pos"):
-                    live.add(d["pos"]["dir"])  # positional delete masks
+            # positional delete masks
+            live |= {d["pos"]["dir"] for d in (m or {}).get("dv") or []}
         latest = self._latest_version(name)
         removed = self._sweep_data_dirs(name, live, writer_grace_s)
         import time as _time

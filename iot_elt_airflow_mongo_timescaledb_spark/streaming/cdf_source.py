@@ -121,7 +121,8 @@ def _schema_mapping(schema_json: dict | None):
 
 #: reader features this build of the STREAM reader implements; the
 #: same refuse-on-unknown contract as ManifestFormat.READER_FEATURES
-_READER_FEATURES = frozenset({"dv", "dv-eq", "dv-pos", "column-mapping"})
+#: (an older build's "dv" refuses with the same migration hint)
+_READER_FEATURES = frozenset({"dv-pos", "column-mapping"})
 
 
 class _PlainLog:
@@ -271,10 +272,15 @@ class _PlainLog:
             return None
         unknown = set(m.get("reader_features") or ()) - _READER_FEATURES
         if unknown:
+            hint = ""
+            if "dv" in unknown:
+                from ..plans.table_format import RETIRED_DV_FIX
+
+                hint = "; " + RETIRED_DV_FIX
             raise RuntimeError(
                 f"table {self.table} (v{version}) requires reader "
                 f"feature(s) {sorted(unknown)} the CDF stream reader "
-                "does not implement"
+                "does not implement" + hint
             )
         if not resolve:
             return m
@@ -375,38 +381,15 @@ class _PlainLog:
             )
         )
 
-    def _dv_specs(self, m: dict) -> dict:
-        """Per-entry-ident MOR delete specs for a SNAPSHOT step
-        (mirrors ``_read_with_dv``'s scoping): equality key files,
-        bounds predicates, AND positional masks all apply in Arrow —
-        the positional form reconstructs (file, row-index) identity
-        per parquet fragment, matching Spark's
-        ``_metadata.row_index`` file order.  Returns
-        {ident: [spec, ...]}."""
+    def _dv_masks(self, m: dict) -> dict:
+        """Per-entry-ident positional delete-mask dirs for a SNAPSHOT
+        step (mirrors ``_read_with_dv``'s scoping): {ident: [mask
+        path, ...]}."""
         out: dict = {}
         for d in m.get("dv") or []:
-            if "pos" in d:
-                spec = {
-                    "kind": "pos",
-                    "path": posixpath.join(
-                        self.table_path, d["pos"]["dir"]
-                    ),
-                }
-                for ident in d.get("applies") or []:
-                    out.setdefault(ident, []).append(spec)
-                continue
-            if "keys" in d:
-                spec = {
-                    "kind": "keys",
-                    "col": d["keys"]["col"],
-                    "path": posixpath.join(
-                        self.table_path, d["keys"]["dir"]
-                    ),
-                }
-            else:
-                spec = {"kind": "bounds", "bounds": d["bounds"]}
+            path = posixpath.join(self.table_path, d["pos"]["dir"])
             for ident in d.get("applies") or []:
-                out.setdefault(ident, []).append(spec)
+                out.setdefault(ident, []).append(path)
         return out
 
     def steps(self, since: int, to: int) -> list[dict]:
@@ -454,10 +437,9 @@ class _PlainLog:
             if prev == 0:
                 # feed from the beginning: full snapshot = all inserts.
                 # The batch reader serves this through read_version,
-                # which applies merge-on-read delete masks — equality
-                # and bounds forms apply in Arrow here (r14);
-                # positional masks refuse in _dv_specs.
-                dv_by_ident = self._dv_specs(m)
+                # which applies merge-on-read delete masks — so does
+                # ``CdfStreamReader.read``, per parquet fragment.
+                dv_by_ident = self._dv_masks(m)
                 entries = m["entries"]
             else:
                 if prev_m is None:
@@ -496,7 +478,8 @@ class _PlainLog:
 class CdfPartition(InputPartition):
     """One data dir of one version step — the executor-parallel unit.
     Carries everything ``read`` needs (paths, constants, the declared
-    schema as Spark JSON, the physical→live rename map) so the read is
+    schema as Spark JSON, the physical→live rename map, a snapshot
+    step's positional delete-mask dirs in ``dv``) so the read is
     static and stateless as the API requires."""
 
     def __init__(
@@ -537,65 +520,6 @@ def _arrow_schema(schema_json: dict):
     return pa.schema(
         [pa.field(f.name, to_arrow_type(f.dataType), True) for f in st.fields]
     )
-
-
-def _apply_dv_arrow(table, specs: list, filesystem=None):
-    """Arrow-side MOR delete application for SNAPSHOT steps (mirrors
-    ``_read_with_dv`` semantics): equality key files anti-filter,
-    bounds predicates filter ``NOT(coalesce(cond, FALSE))`` — a NULL
-    predicate never deletes, exactly SQL DELETE.  A column the files
-    predate (absent from the snapshot schema) makes the predicate a
-    provable no-op, same as the batch reader."""
-    import pyarrow.compute as pc
-    import pyarrow.dataset as ds
-
-    for spec in specs:
-        if spec["kind"] == "keys":
-            col = spec["col"]
-            if col not in table.column_names:
-                continue
-            keys = (
-                ds.dataset(
-                    spec["path"], format="parquet", filesystem=filesystem
-                )
-                .to_table(columns=[col])
-                .column(col)
-            )
-            hit = pc.is_in(
-                table.column(col).cast(keys.type), value_set=keys
-            )
-            table = table.filter(
-                pc.invert(pc.fill_null(hit, False))
-            )
-            continue
-        # bounds: {col: {"range": [lo, hi]} | {"in": [...]}} AND-ed
-        cond = None
-        skip = False
-        for c, enc in spec["bounds"].items():
-            if c not in table.column_names:
-                skip = True
-                break
-            col_arr = table.column(c)
-            if "in" in enc:
-                import pyarrow as pa
-
-                t = pc.is_in(col_arr, value_set=pa.array(enc["in"]))
-            else:
-                lo, hi = enc["range"]
-                t = None
-                if lo is not None:
-                    t = pc.greater_equal(col_arr, lo)
-                if hi is not None:
-                    u = pc.less_equal(col_arr, hi)
-                    t = u if t is None else pc.and_kleene(t, u)
-                if t is None:
-                    skip = True
-                    break
-            cond = t if cond is None else pc.and_kleene(cond, t)
-        if skip or cond is None:
-            continue
-        table = table.filter(pc.invert(pc.fill_null(cond, False)))
-    return table
 
 
 class CdfStreamReader(DataSourceStreamReader):
@@ -803,11 +727,8 @@ class CdfStreamReader(DataSourceStreamReader):
         dataset = ds.dataset(
             partition.path, format="parquet", filesystem=fs
         )
-        dv = partition.dv or []
-        pos_specs = [d for d in dv if d["kind"] == "pos"]
-        row_specs = [d for d in dv if d["kind"] != "pos"]
         n_out = 0
-        if pos_specs:
+        if partition.dv:
             # positional masks address (table-root-relative file path,
             # row index within the file) — Spark's
             # _metadata.row_index identity.  Deletes are idempotent,
@@ -815,9 +736,9 @@ class CdfStreamReader(DataSourceStreamReader):
             import pyarrow.compute as pc
 
             masks: dict[str, set] = {}
-            for spec in pos_specs:
+            for mask_path in partition.dv:
                 mt = ds.dataset(
-                    spec["path"], format="parquet", filesystem=fs
+                    mask_path, format="parquet", filesystem=fs
                 ).to_table(columns=["file", "pos"])
                 for f, pos in zip(
                     mt.column("file").to_pylist(),
@@ -840,8 +761,6 @@ class CdfStreamReader(DataSourceStreamReader):
                     )
                     tbl = tbl.filter(keep)
                 out = self._project(tbl, partition, target)
-                if row_specs:
-                    out = _apply_dv_arrow(out, row_specs, fs)
                 n_out += len(out)
                 yield from out.to_batches()
         else:
@@ -849,8 +768,6 @@ class CdfStreamReader(DataSourceStreamReader):
                 out = self._project(
                     pa.Table.from_batches([batch]), partition, target
                 )
-                if row_specs:
-                    out = _apply_dv_arrow(out, row_specs, fs)
                 n_out += len(out)
                 yield from out.to_batches()
         if n_out == 0:

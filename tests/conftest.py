@@ -59,7 +59,6 @@ SLOW_NODE_IDS = {
     "test_sketches.py::test_topk_retention_margin_property",
     "test_snapshot.py::test_snapshot_random_batch_sequences_match_reference",
     "test_column_mapping_properties.py::test_random_mapping_sequences_match_model",
-    "test_dv_positional.py::test_forms_equivalent_lifecycle",
     "test_manifest_merge.py::test_txn_crash_between_bounded_merges_no_skew_no_resurrection",
 }
 

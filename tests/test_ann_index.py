@@ -458,7 +458,7 @@ def test_sync_from_cdf_mor_zero_rewrite_same_results(spark, tmp_path, clustered)
     m = fmt._manifest(idx.assign_table)
     after = {(e["dir"], e.get("rel")) for e in m["entries"]}
     assert before <= after and len(after - before) == 1  # append only
-    assert any("keys" in d for d in (m.get("dv") or []))
+    assert any("pos" in d for d in (m.get("dv") or []))
     final = fmt.read("raw.vecs")
     queries = clustered.filter(F.col("vec_id") % 50 == 0)
     served = idx.topk(queries, k=3, n_probe=2)

@@ -425,9 +425,8 @@ def test_rollup_maintain_stream_end_to_end(spark, tmp_path):
 
 def test_snapshot_with_mor_deletes_streams_masked(spark, tmp_path):
     """r14: a snapshot step whose first travelable version carries MOR
-    delete predicates (equality key file AND bounds form) streams the
-    MASKED rows — equal to the batch CDF — instead of refusing;
-    positional masks still refuse loudly."""
+    delete masks (a merge's AND a delete's) streams the MASKED rows —
+    equal to the batch CDF — instead of refusing."""
     root = str(tmp_path)
     fmt = _fmt(spark, root, "manifest", stats_cols=("k",))
     fmt.write(
@@ -435,7 +434,7 @@ def test_snapshot_with_mor_deletes_streams_masked(spark, tmp_path):
         _rows(spark, [(i, f"v{i}", float(i)) for i in range(10)]),
         "overwrite",
     )
-    # equality key-file mask (merge_mor delete) + bounds mask
+    # a merge_mor delete mask + a delete_where_mor mask
     fmt.merge_mor(
         "s.t",
         _rows(spark, []).limit(0),
@@ -445,8 +444,8 @@ def test_snapshot_with_mor_deletes_streams_masked(spark, tmp_path):
     fmt.delete_where_mor("s.t", "k", 7, 8)
     # a plain append as the head (a cdc-carrying head can never serve
     # a from-0 feed — both readers refuse identically), then vacuum to
-    # it: the stream's first step is now a SNAPSHOT carrying both dv
-    # forms
+    # it: the stream's first step is now a SNAPSHOT carrying both
+    # masks
     fmt.write("s.t", _rows(spark, [(100, "new", 1.0)]), "append")
     fmt.vacuum("s.t", keep_last=1, writer_grace_s=0)
 
@@ -461,9 +460,7 @@ def test_snapshot_with_positional_mask_streams_masked(spark, tmp_path):
     per parquet fragment, by (table-root-relative file path, row
     index), the exact identity Spark's _metadata.row_index uses."""
     root = str(tmp_path)
-    fmt = _fmt(
-        spark, root, "manifest", stats_cols=("k",), dv_form="positional"
-    )
+    fmt = _fmt(spark, root, "manifest", stats_cols=("k",))
     fmt.write(
         "s.t",
         _rows(spark, [(i, "a", float(i)) for i in range(6)]),
@@ -533,8 +530,8 @@ def test_fs_factory_kill_replay_exactly_once(spark, tmp_path):
 
 
 def test_fs_factory_snapshot_mor_masks_through_nonlocal_fs(spark, tmp_path):
-    """The Arrow-side MOR delete application (equality keys) also
-    routes through the injected filesystem."""
+    """The Arrow-side MOR delete-mask application also routes through
+    the injected filesystem."""
     root = str(tmp_path)
     fmt = _fmt(spark, root, "manifest", stats_cols=("k",))
     fmt.write(
@@ -548,7 +545,7 @@ def test_fs_factory_snapshot_mor_masks_through_nonlocal_fs(spark, tmp_path):
         delete_keys=spark.createDataFrame([(2,)], "k long"),
     )
     # plain-append head, vacuum to it: the stream's first step is a
-    # SNAPSHOT carrying the equality key-file mask (same shape as the
+    # SNAPSHOT carrying the merge's delete mask (same shape as the
     # local-path test), now read through the injected filesystem
     fmt.write("s.t", _rows(spark, [(9, "new", 9.0)]), "append")
     fmt.vacuum("s.t", keep_last=1, writer_grace_s=0)

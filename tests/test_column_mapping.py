@@ -96,12 +96,16 @@ def test_rename_guard_rails(spark, tmp_path):
     with pytest.raises(ValueError, match="constraint"):
         fmt.rename_column("s.t", "v", "val")
     fmt.drop_constraint("s.t", "v_pos")
+    # a live merge-on-read mask names (file, row-index) pairs, no
+    # column: rename and drop go through and the masked row stays
+    # deleted
     fmt.delete_where_mor("s.t", "v", 20, 20)
-    with pytest.raises(ValueError, match="merge-on-read"):
-        fmt.rename_column("s.t", "v", "val")
-    fmt.materialize_deletes("s.t")
-    fmt.rename_column("s.t", "v", "val")  # now clean
+    fmt.rename_column("s.t", "v", "val")
     assert sorted(r["val"] for r in fmt.read("s.t").collect()) == [10]
+    fmt.drop_column("s.t", "val")
+    out = fmt.read("s.t")
+    assert "val" not in out.columns
+    assert [(r["day"], r["k"]) for r in out.collect()] == [("d1", 1)]
 
 
 def test_pruning_stays_bounded_across_rename(spark, tmp_path):
@@ -235,7 +239,7 @@ def test_reader_feature_guard(spark, tmp_path):
     fmt.write("s.t", _rows(spark, (1, 10, "a")), "overwrite")
     fmt.rename_column("s.t", "v", "value")
     legacy = _fmt(spark, str(tmp_path))
-    legacy.READER_FEATURES = frozenset({"dv", "dv-eq", "dv-pos"})
+    legacy.READER_FEATURES = frozenset({"dv-pos"})
     with pytest.raises(RuntimeError, match="column-mapping"):
         legacy.read("s.t")
 

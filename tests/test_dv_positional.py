@@ -1,10 +1,6 @@
 """Positional deletion vectors (round 12, VERDICT r11 task 2) — the
-second MOR retraction form, behind the writer flag ``dv_form``.
-
-``dv_form="equality"`` (default) is the round-10/11 behavior: stored
-predicates for DELETE/UPDATE, equality-delete key files for MERGE
-(Iceberg v2 equality deletes).  ``dv_form="positional"`` stores a
-(file, row-index) MASK instead — Delta's deletion-vector design:
+one merge-on-read (MOR) retraction form.  MOR delete/update/merge
+store a (file, row-index) MASK — Delta's deletion-vector design:
 
 - the read masks via ONE anti-join on two machine columns (table-root-
   relative file path + parquet ``_metadata.row_index``), independent of
@@ -12,12 +8,13 @@ predicates for DELETE/UPDATE, equality-delete key files for MERGE
 - the dv's ``applies`` set is scoped to the files that ACTUALLY contain
   deleted rows, not every may-match dir — untouched dirs read clean and
   stay eligible for threshold compaction;
-- non-JSON-storable predicates work (nothing persists but positions).
+- any predicate works (nothing persists but positions).
 
-These tests pin: form equivalence (same lifecycle, byte-identical
-reads + CDC), finer applies scoping, point-in-time semantics,
-materialize_deletes / vacuum / reader-feature behavior, and mixed
-equality+positional dv lists on one table.
+These tests pin: zero-rewrite commits with exact reads + CDC, applies
+scoping, point-in-time semantics, materialize_deletes / vacuum /
+reader-feature behavior, the refusal of manifests an older build wrote
+with the retired stored-predicate and key-file forms, and the Spark
+job counts of the MOR verbs and of a masked read.
 """
 
 from __future__ import annotations
@@ -36,7 +33,6 @@ from iot_elt_airflow_mongo_timescaledb_spark.plans.table_format import (
 def _fmt(spark, root, kind="manifest", **kw):
     cls = {"manifest": ManifestFormat, "catalog": CatalogManifestFormat}[kind]
     kw.setdefault("cdf", True)
-    kw.setdefault("dv_form", "positional")
     kw.setdefault("stats_cols", ("k",))
     return cls(spark, root, auto_compact_dirs=None, **kw)
 
@@ -52,15 +48,10 @@ def _seed(spark, fmt, name="s.t", n=5, per=10):
     return {(e["dir"], e.get("rel")) for e in fmt._manifest(name)["entries"]}
 
 
-def test_dv_form_validation(spark, tmp_path):
-    with pytest.raises(ValueError, match="dv_form"):
-        ManifestFormat(spark, str(tmp_path), dv_form="bitmap")
-
-
 @pytest.mark.parametrize("kind", ["manifest", "catalog"])
 def test_positional_delete_rewrites_nothing(spark, tmp_path, kind):
-    """The positional twin of the equality suite's headline test: one
-    manifest commit, zero data rewrites, exact reads, CDF classes."""
+    """One manifest commit, zero data rewrites, exact reads, CDF
+    classes, and a mask entry carrying its row count."""
     fmt = _fmt(spark, str(tmp_path), kind)
     before = _seed(spark, fmt)
     base = fmt._manifest("s.t")["version"]
@@ -84,58 +75,26 @@ def test_positional_delete_rewrites_nothing(spark, tmp_path, kind):
     assert not [c for c in fmt.read("s.t").columns if c.startswith("__dv_")]
 
 
-def test_forms_equivalent_lifecycle(spark, tmp_path):
-    """The SAME delete/merge/update lifecycle through both forms lands
-    identical table content and identical CDC classes."""
-    results = {}
-    for form in ("equality", "positional"):
-        fmt = _fmt(spark, str(tmp_path / form), dv_form=form)
-        _seed(spark, fmt)
-        base = fmt._manifest("s.t")["version"]
-        assert fmt.delete_where_mor("s.t", "k", 5, 8) == 4
-        fmt.merge_mor("s.t", _rows(spark, (10, 999), (77, 770)), "k")
-        assert fmt.update_where_mor("s.t", "k", {"v": "v + 1000"}, 30, 32) == 3
-        results[form] = {
-            "rows": sorted(
-                (r["k"], r["v"]) for r in fmt.read("s.t").collect()
-            ),
-            "cdc": sorted(
-                (r["k"], r["_change_type"], r["_commit_version"])
-                for r in fmt.read_changes_cdf("s.t", base).collect()
-            ),
-        }
-    assert results["equality"] == results["positional"]
-
-
 def test_positional_applies_scoped_to_touched_files(spark, tmp_path):
-    """The form's read-cost advantage: a merge whose matched keys live
-    in ONE dir scopes its mask to that dir only — the equality twin
-    scopes to every may-match entry.  Untouched dirs read clean and
-    stay compactable."""
-    eq = _fmt(spark, str(tmp_path / "eq"), dv_form="equality")
-    po = _fmt(spark, str(tmp_path / "po"), dv_form="positional")
-    for fmt in (eq, po):
-        # 5 dirs, OVERLAPPING k stats (same range each) so min/max
-        # pruning cannot narrow the may-match set
-        for i in range(5):
-            fmt.write(
-                "s.t",
-                _rows(spark, *[(j, i * 1000 + j) for j in range(10)]),
-                "append" if i else "overwrite",
-            )
-    # matched key k=3: present in every dir — now delete by a predicate
-    # only dir 0's rows satisfy (v < 10)
-    assert eq.delete_where_mor("s.t", {"k": (3, 3), "v": (None, 9)}) == 1
-    assert po.delete_where_mor("s.t", {"k": (3, 3), "v": (None, 9)}) == 1
-    eq_applies = eq._manifest("s.t")["dv"][0]["applies"]
-    po_applies = po._manifest("s.t")["dv"][0]["applies"]
-    # equality form: all 5 may-match dirs pay the read-time filter and
-    # leave compaction; positional: only the one file with the deleted
-    # row
-    assert len(eq_applies) == 5
-    assert len(po_applies) == 1
-    assert sorted(r["v"] for r in po.read("s.t").collect()) == sorted(
-        r["v"] for r in eq.read("s.t").collect()
+    """The form's read-cost advantage: a delete whose matched rows live
+    in ONE dir scopes its mask to that dir only, though all five dirs
+    are may-match candidates.  Untouched dirs read clean and stay
+    compactable."""
+    fmt = _fmt(spark, str(tmp_path))
+    # 5 dirs, OVERLAPPING k stats (same range each) so min/max
+    # pruning cannot narrow the may-match set
+    for i in range(5):
+        fmt.write(
+            "s.t",
+            _rows(spark, *[(j, i * 1000 + j) for j in range(10)]),
+            "append" if i else "overwrite",
+        )
+    # key k=3 is present in every dir — delete by a predicate only
+    # dir 0's row satisfies (v < 10)
+    assert fmt.delete_where_mor("s.t", {"k": (3, 3), "v": (None, 9)}) == 1
+    assert len(fmt._manifest("s.t")["dv"][0]["applies"]) == 1
+    assert sorted(r["v"] for r in fmt.read("s.t").collect()) == sorted(
+        i * 1000 + j for i in range(5) for j in range(10) if (i, j) != (0, 3)
     )
 
 
@@ -192,31 +151,10 @@ def test_old_reader_refuses_positional_masks(spark, tmp_path, monkeypatch):
     fmt.delete_where_mor("s.t", "k", 5, 8)
     old = ManifestFormat(spark, str(tmp_path))
     monkeypatch.setattr(
-        ManifestFormat, "READER_FEATURES", frozenset({"dv", "dv-eq"})
+        ManifestFormat, "READER_FEATURES", frozenset({"column-mapping"})
     )
     with pytest.raises(RuntimeError, match="dv-pos"):
         old.read("s.t")
-
-
-def test_mixed_dv_forms_on_one_table(spark, tmp_path):
-    """Equality and positional dvs can coexist in one manifest (two
-    writers with different settings): reads apply both."""
-    po = _fmt(spark, str(tmp_path))
-    eq = _fmt(spark, str(tmp_path), dv_form="equality")
-    _seed(spark, po)
-    po.delete_where_mor("s.t", "k", 5, 6)
-    eq.merge_mor("s.t", _rows(spark, (10, 999)), "k")
-    po.merge_mor("s.t", _rows(spark, (20, 888)), "k")
-    m = po._manifest("s.t")
-    kinds = sorted(
-        next(k for k in ("pos", "keys", "bounds") if k in d)
-        for d in m["dv"]
-    )
-    assert kinds == ["keys", "pos", "pos"]
-    rows = {r["k"]: r["v"] for r in po.read("s.t").collect()}
-    assert 5 not in rows and 6 not in rows
-    assert rows[10] == 999 and rows[20] == 888
-    assert len(rows) == 48
 
 
 def test_positional_cow_delete_sheds_mask(spark, tmp_path):
@@ -235,8 +173,8 @@ def test_positional_cow_delete_sheds_mask(spark, tmp_path):
 
 
 def test_positional_non_json_predicate_allowed(spark, tmp_path):
-    """The equality form refuses non-JSON-storable bounds; positional
-    needs no stored predicate, so it handles them."""
+    """No predicate is stored, so bounds of any type work — here
+    datetimes, which a JSON manifest could not hold."""
     import datetime
 
     fmt = _fmt(spark, str(tmp_path), stats_cols=("d",))
@@ -255,3 +193,84 @@ def test_positional_non_json_predicate_allowed(spark, tmp_path):
     )
     assert n == 2
     assert {r["k"] for r in fmt.read("s.t").collect()} == {0, 3, 4}
+
+
+def _forge_head(fmt, name, dv, feats):
+    """Rewrite the head version file the way an older build wrote it:
+    ``dv`` entries listed under reader features ``feats``."""
+    import json
+
+    v = fmt._manifest(name, resolve=False, expand_lists=False)["version"]
+    path = os.path.join(fmt._log_path(name), f"v{v:012d}.json")
+    body = json.loads(fmt.fs.read_text(path))
+    body["dv"], body["reader_features"] = dv, feats
+    fmt.fs.delete(path)
+    fmt.fs.write_text(path, json.dumps(body), overwrite=False)
+
+
+@pytest.mark.parametrize("form", ["keys", "bounds"])
+def test_retired_dv_forms_refuse_in_batch_and_stream(spark, tmp_path, form):
+    """A manifest an older build wrote with an equality-delete key file
+    (``keys``, features dv + dv-eq) or a stored predicate (``bounds``,
+    feature dv only) must refuse to resolve in the batch reader AND the
+    CDF stream reader, naming the fix — reading past the entry would
+    serve its deleted rows."""
+    from iot_elt_airflow_mongo_timescaledb_spark.streaming.cdf_source import (
+        _PlainLog,
+    )
+
+    fmt = _fmt(spark, str(tmp_path))
+    _seed(spark, fmt, n=2)
+    applies = [fmt._dv_ident(e) for e in fmt._manifest("s.t")["entries"]]
+    if form == "keys":
+        entry = {"keys": {"col": "k", "dir": "dvk-0", "n": 2}}
+        feats = ["dv", "dv-eq"]
+    else:
+        entry = {"bounds": {"k": {"range": [3, 4]}}, "n": 2}
+        feats = ["dv"]
+    _forge_head(fmt, "s.t", [{**entry, "applies": applies}], feats)
+    with pytest.raises(RuntimeError, match="materialize_deletes"):
+        _fmt(spark, str(tmp_path)).read("s.t")
+    log = _PlainLog(str(tmp_path), "s.t", catalog=False)
+    with pytest.raises(RuntimeError, match="materialize_deletes"):
+        log.steps(0, log.head_version())
+
+
+def _jobs_in(spark, fn):
+    """(result, Spark job ids started while ``fn`` runs), attributed
+    by a job group set on this thread.  The group name is fresh per
+    call: the tracker keeps finished jobs, so a reused name would
+    count an earlier call's jobs too."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"mor-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "mor verb")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_mor_write_and_masked_read_job_counts(spark, tmp_path):
+    """Without CDF a MOR delete is ONE job (the mask write observes the
+    count and the masked files), an update TWO (mask, then postimage;
+    the count rides the mask write), and a read through both masks at
+    most three (the masks' schema is declared, never inferred)."""
+    fmt = _fmt(spark, str(tmp_path), cdf=False)
+    _seed(spark, fmt)
+    n, jobs = _jobs_in(spark, lambda: fmt.delete_where_mor("s.t", "k", 21, 24))
+    assert n == 4 and len(jobs) <= 1, jobs
+    n, jobs = _jobs_in(
+        spark,
+        lambda: fmt.update_where_mor("s.t", "k", {"v": "v + 1"}, 30, 32),
+    )
+    assert n == 3 and len(jobs) <= 2, jobs
+    assert len(fmt._manifest("s.t")["dv"]) == 2
+    rows, jobs = _jobs_in(spark, lambda: fmt.read("s.t").collect())
+    assert len(jobs) <= 3, jobs
+    got = {r["k"]: r["v"] for r in rows}
+    assert len(rows) == len(got) == 46
+    assert got[30] == 301 and got[33] == 303 and 21 not in got

@@ -1,10 +1,9 @@
-"""Merge-on-read DELETE predicates (round 10) — the Delta
-deletion-vector / Iceberg v2 equality-delete analogue, stored as
-predicates in the manifest: a narrow delete writes ONE manifest (zero
-data files rewritten), every read applies the predicate to exactly the
-entries it was scoped to, later appends are unaffected (point-in-time
-semantics), and COW verbs materialize + shed predicates per entry they
-rewrite.
+"""Merge-on-read DELETE (round 10) — the Delta deletion-vector
+analogue, stored as positional (file, row-index) masks the manifest
+references: a narrow delete rewrites no data file, every read applies
+the mask to exactly the entries it was scoped to, later appends are
+unaffected (point-in-time semantics), and COW verbs materialize + shed
+masks per entry they rewrite.
 """
 
 from __future__ import annotations
@@ -45,10 +44,10 @@ def test_mor_delete_rewrites_nothing(spark, tmp_path, kind):
     m = fmt._manifest("s.t")
     after = {(e["dir"], e.get("rel")) for e in m["entries"]}
     assert after == before  # EVERY entry carried: zero data rewrite
-    assert len(m["dv"]) == 1 and m["dv"][0]["n"] == 4
+    assert len(m["dv"]) == 1 and m["dv"][0]["pos"]["n"] == 4
     got = {r["k"] for r in fmt.read("s.t").collect()}
     assert got == set(range(50)) - {21, 22, 23, 24}
-    # read_where applies the predicate too
+    # read_where applies the mask too
     assert {
         r["k"] for r in fmt.read_where("s.t", "k", 20, 29).collect()
     } == {20, 25, 26, 27, 28, 29}
@@ -160,17 +159,6 @@ def test_restore_across_mor_delete(spark, tmp_path):
     assert not fmt._manifest("s.t").get("dv")
 
 
-def test_mor_rejects_unstorable_bounds(spark, tmp_path):
-    import datetime
-
-    fmt = _fmt(spark, str(tmp_path))
-    fmt.write("s.t", _rows(spark, (1, 10)), "overwrite")
-    with pytest.raises(TypeError, match="cow"):
-        fmt.delete_where_mor(
-            "s.t", "k", datetime.datetime(2024, 1, 1), None
-        )
-
-
 def test_mor_delete_on_segmented_table(spark, tmp_path):
     fmt = ManifestFormat(
         spark, str(tmp_path), auto_compact_dirs=None,
@@ -207,14 +195,14 @@ def test_reader_features_guard(spark, tmp_path):
     fmt = _fmt(spark, str(tmp_path))
     fmt.write("s.t", _rows(spark, (1, 10)), "overwrite")
     fmt.delete_where_mor("s.t", "k", 1, 1)
-    # this build understands "dv": reads work
+    # this build understands "dv-pos": reads work
     assert fmt.read("s.t").count() == 0
     # forge a manifest demanding a future feature
     log = _os.path.join(str(tmp_path), "s", "t", "_log")
     vf = sorted(f for f in _os.listdir(log) if f.startswith("v"))[-1]
     path = _os.path.join(log, vf)
     body = _json.loads(fmt.fs.read_text(path))
-    body["reader_features"] = ["dv", "dv_v99_bitmap"]
+    body["reader_features"] = ["dv-pos", "dv_v99_bitmap"]
     fmt.fs.delete(path)
     fmt.fs.write_text(path, _json.dumps(body), overwrite=False)
     cold = _fmt(spark, str(tmp_path))
@@ -273,19 +261,33 @@ def test_materialize_deletes_keeps_cdf_consumable(spark, tmp_path):
     ] == [(80, 3)]
 
 
-def test_mor_in_set_validation(spark, tmp_path):
-    fmt = _fmt(spark, str(tmp_path))
-    fmt.write("s.t", _rows(spark, (1, 10)), "overwrite")
-    with pytest.raises(TypeError, match="NULL"):
-        fmt.delete_where_mor("s.t", {"k": [None, 3]})
-    with pytest.raises(TypeError, match="mixes"):
-        fmt.delete_where_mor("s.t", {"k": [1, "a"]})
+def test_mor_in_set_with_null_matches_cow(spark, tmp_path):
+    """An IN-set holding None deletes exactly what the copy-on-write
+    delete does: SQL IN never matches NULL, so only the listed non-NULL
+    key goes — and the NULL-keyed row survives in both forms."""
+    cow = _fmt(spark, str(tmp_path / "cow"))
+    mor = _fmt(spark, str(tmp_path / "mor"))
+    for fmt in (cow, mor):
+        fmt.write(
+            "s.t",
+            spark.createDataFrame(
+                [(1, 10), (3, 30), (None, 40)], "k long, v long"
+            ),
+            "overwrite",
+        )
+    assert cow.delete_where("s.t", {"k": [None, 3]}) == 1
+    assert mor.delete_where_mor("s.t", {"k": [None, 3]}) == 1
+
+    def rows(fmt):
+        return sorted((r["k"] or -1, r["v"]) for r in fmt.read("s.t").collect())
+
+    assert rows(mor) == rows(cow) == [(-1, 40), (1, 10)]
 
 
 def test_dv_on_schema_evolved_column_reads(spark, tmp_path):
-    """Review finding: a predicate on a column some entries PREDATE
-    must not fail analysis for their group — those rows are NULL there
-    and SQL DELETE never deletes on NULL."""
+    """Review finding: a delete on a column some entries PREDATE must
+    not fail analysis for their group — those rows are NULL there and
+    SQL DELETE never deletes on NULL."""
     fmt = _fmt(spark, str(tmp_path))
     fmt.write("s.t", _rows(spark, (1, 10), (2, 20)), "overwrite")
     fmt.write(
@@ -296,8 +298,8 @@ def test_dv_on_schema_evolved_column_reads(spark, tmp_path):
         "append",
     )
     assert fmt.delete_where_mor("s.t", "c2", 7, 7) == 1
-    # a second predicate narrows one group to {P2} while the old dir
-    # stays {P1}-only — the P1 filter must not reference c2 there
+    # a second mask stacks on the new dir; the old dir, which predates
+    # c2, reads unmasked beside it
     assert fmt.delete_where_mor("s.t", "k", 4, 4) == 1
     got = {r["k"] for r in fmt.read("s.t").collect()}
     assert got == {1, 2}

@@ -1,14 +1,13 @@
 """Merge-on-read UPDATE / MERGE (VERDICT r10 task 5): the batch (or
-postimage) APPENDS, matched keys / predicate rows mask via stored
-deletes — equality-delete key files for MERGE (Iceberg v2 equality
-deletes / Delta DV-backed MERGE), bounds predicates for UPDATE — and
-no existing data file is ever rewritten, so write cost is O(changed
-rows), independent of touched-file SIZE.  ``materialize_deletes``
-converts the debt back into clean files.
+postimage) APPENDS, matched rows drop via a positional (file,
+row-index) delete mask (Delta DV-backed MERGE), and no existing data
+file is ever rewritten, so write cost is O(changed rows), independent
+of touched-file SIZE.  ``materialize_deletes`` converts the debt back
+into clean files.
 
 Pins: byte-equality with the copy-on-write twins, zero-rewrite commit
 shape, identical CDC classes, append-feed refusal, purge + vacuum
-lifecycle of the key files, and the dv-eq reader-protocol feature.
+lifecycle of the mask dirs, and the dv-pos reader-protocol feature.
 """
 
 from __future__ import annotations
@@ -64,10 +63,12 @@ def test_merge_mor_zero_rewrite_same_content_as_cow(spark, tmp_path, kind):
     after = {e["dir"] for e in m["entries"]}
     # zero rewrite: all 5 seeded dirs survive; exactly 1 new batch dir
     assert before <= after and len(after - before) == 1
-    # dv carries the equality-delete key file + protocol feature
+    # dv carries the positional mask (3 matched rows) + protocol
+    # feature, scoped to the one seeded dir holding keys 21-23
     dvs = m.get("dv") or []
-    assert len(dvs) == 1 and dvs[0]["keys"]["col"] == "k"
-    assert "dv-eq" in (m.get("reader_features") or [])
+    assert len(dvs) == 1 and dvs[0]["pos"]["n"] == 3
+    assert len(dvs[0]["applies"]) == 1
+    assert m.get("reader_features") == ["dv-pos"]
 
 
 @pytest.mark.parametrize("kind", ["manifest", "catalog"])
@@ -131,9 +132,9 @@ def test_merge_mor_append_feed_refuses_cdf_serves(spark, tmp_path):
 
 
 def test_merge_mor_purge_and_vacuum_lifecycle(spark, tmp_path):
-    """materialize_deletes clears the key mask (content preserved,
-    dv list empty); vacuum keeps the key file while a retained
-    version references it and sweeps it after."""
+    """materialize_deletes clears the mask (content preserved, dv list
+    empty); vacuum keeps the mask dir while a retained version
+    references it and sweeps it after."""
     fmt = _fmt(spark, str(tmp_path))
     _seed_chunks(spark, fmt)
     keys = _rows(spark, (21, 0), (23, 0)).select("k")
@@ -144,7 +145,7 @@ def test_merge_mor_purge_and_vacuum_lifecycle(spark, tmp_path):
     def key_dirs():
         return [
             d for d in fmt.fs.list_subdirs(fmt.path("s.t"))
-            if d.startswith("dvk-")
+            if d.startswith("dvp-")
         ]
 
     assert len(key_dirs()) == 1
@@ -152,7 +153,7 @@ def test_merge_mor_purge_and_vacuum_lifecycle(spark, tmp_path):
     assert n >= 1
     assert not (fmt._manifest("s.t").get("dv") or [])
     assert _content(fmt) == want
-    # keep_last=2 retains the MOR version: the key file survives
+    # keep_last=2 retains the MOR version: the mask dir survives
     fmt.vacuum("s.t", keep_last=2, writer_grace_s=0)
     assert len(key_dirs()) == 1
     fmt.vacuum("s.t", keep_last=1, writer_grace_s=0)
@@ -243,24 +244,24 @@ def test_auto_purge_dvs_bounds_mask_accumulation(spark, tmp_path):
 def test_merge_mor_racing_disjoint_append_rebases(spark, tmp_path):
     """Round 13 (optimistic concurrency): a concurrent append whose
     stats are PROVABLY outside the merge's key range rebases inside
-    the commit — both effects land, the key mask stays scoped to the
+    the commit — both effects land, the mask stays scoped to the
     entries it was computed against."""
     fmt = _fmt(spark, str(tmp_path))
     _seed_chunks(spark, fmt)
-    orig_land = type(fmt)._land_dv_keys
+    orig_land = type(fmt)._land_dv_pos
 
-    def racing_land(self, name, keys, col):
+    def racing_land(self, name, matched, candidates):
         # a concurrent append sneaks in during the merge's write window
-        type(fmt)._land_dv_keys = orig_land
+        type(fmt)._land_dv_pos = orig_land
         fmt2 = _fmt(spark, str(tmp_path))
         fmt2.write("s.t", _rows(spark, (500, 500)), "append")
-        return orig_land(self, name, keys, col)
+        return orig_land(self, name, matched, candidates)
 
-    type(fmt)._land_dv_keys = racing_land
+    type(fmt)._land_dv_pos = racing_land
     try:
         fmt.merge_mor("s.t", _rows(spark, (21, -1)), "k")
     finally:
-        type(fmt)._land_dv_keys = orig_land
+        type(fmt)._land_dv_pos = orig_land
     got = _content(fmt)
     assert got[500] == 500 and got[21] == -1
     assert len(fmt._manifest("s.t").get("dv") or []) == 1

@@ -8,7 +8,8 @@ Pins the cross-cutting changes of optimization round 2:
   append, overwrite, swap) re-infers.
 - write-time schema memo: an unpartitioned manifest data dir's schema
   is memoized AT WRITE, so even the first read skips footer inference;
-  evolution must still NULL-fill across dirs.
+  evolution must still NULL-fill across dirs, and the first read serves
+  the same schema as a cold read.
 - ``_DIR_SCHEMA_CACHE`` LRU: exceeding the cap evicts ONE entry (the
   least recently used), not the whole memo (ADVICE r15 #2).
 - ``_DIR_SCHEMA_CACHE`` lock: concurrent gets (which reorder the LRU)
@@ -91,6 +92,28 @@ def test_manifest_write_time_memo_first_read(spark, tmp_path):
     assert (0, None) in got and (5, "x") in got and len(got) == 8
 
 
+def test_write_time_memo_schema_equals_cold_read(spark, tmp_path):
+    """ADVICE r16 #5: the write-time memo keeps ``spark.range``'s
+    non-null ``id``, while cold inference of the dir reports it
+    nullable.  The memo only ever reaches ``reader.schema()``, whose
+    file-source read is all-nullable too, so the first (memo) read and
+    a cold read of one dir serve equal schemas."""
+    from iot_elt_airflow_mongo_timescaledb_spark.fs import join_uri
+
+    df = spark.range(5)
+    assert not df.schema["id"].nullable
+    fmt = ManifestFormat(spark, str(tmp_path), auto_compact_dirs=None)
+    fmt.write("t.n", df, "overwrite")
+    base = join_uri(
+        fmt.path("t.n"), fmt._manifest("t.n")["entries"][0]["dir"]
+    )
+    memo = table_format._DIR_SCHEMA_CACHE[(base, (base,))]
+    assert not memo["id"].nullable  # the memo holds the frame's schema
+    cold = spark.read.option("mergeSchema", "true").parquet(base).schema
+    assert cold["id"].nullable
+    assert fmt.read("t.n").schema == cold
+
+
 def test_dir_schema_cache_lru_evicts_one_entry():
     saved = dict(table_format._DIR_SCHEMA_CACHE)
     saved_cap = table_format._DIR_SCHEMA_CACHE_CAP
@@ -122,9 +145,13 @@ def _cdf_batch(spark, rows, version):
 
 def _jobs_in(spark, fn):
     """Spark job ids started while ``fn`` runs, attributed by a job
-    group set on this thread."""
+    group set on this thread.  The group name is fresh per call: the
+    tracker keeps finished jobs, and ``id(fn)`` of a collected lambda
+    can recur, which would count an earlier call's jobs too."""
+    import uuid
+
     sc = spark.sparkContext
-    group = f"cursor-probe-{id(fn)}"
+    group = f"cursor-probe-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "cursor read")
     try:
         out = fn()

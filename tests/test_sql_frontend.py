@@ -479,7 +479,7 @@ def test_fsck_sees_dv_and_cdc_dirs(spark, tmp_path):
         ),
         "overwrite",
     )
-    # an equality-keys sidecar (MOR merge with delete_keys lands one)
+    # a positional mask dir (MOR merge with delete_keys lands one)
     fmt.merge_mor(
         "s.d",
         spark.createDataFrame([(20, 20.0)], "k long, x double"),
@@ -488,12 +488,12 @@ def test_fsck_sees_dv_and_cdc_dirs(spark, tmp_path):
     )
     sq2 = SqlFrontend(wh)
     assert sq2.sql("FSCK TABLE s.d").first()["ok"] is True
-    # delete the equality-keys sidecar dir -> named as dv corruption
+    # delete the mask dir -> named as dv corruption
     m = fmt._manifest("s.d")
-    d = next(d for d in m["dv"] if d.get("keys"))
+    d = m["dv"][0]
     import os as _os
 
-    shutil.rmtree(_os.path.join(wh.path("s.d"), d["keys"]["dir"]))
+    shutil.rmtree(_os.path.join(wh.path("s.d"), d["pos"]["dir"]))
     r = sq2.sql("FSCK TABLE s.d").first()
     assert r["ok"] is False
-    assert any(x.startswith("dv-keys:") for x in r["missing"])
+    assert any(x.startswith("dv-pos:") for x in r["missing"])

@@ -103,7 +103,7 @@ def main() -> None:
     # -- touched-file-SIZE independence (VERDICT r10 task 5): the same
     # micro-batch against the same table laid out as 4x-larger chunks.
     # COW merge cost scales with the touched chunk's size; the MOR
-    # merge writes only the batch + key file, so it must stay ~flat.
+    # merge writes only the batch + delete mask, so it must stay ~flat.
     n_big = max(2, n_chunks // 4)
     big_bounds = [bounds[0]] + [
         bounds[(i + 1) * n_chunks // n_big] for i in range(n_big)

@@ -115,7 +115,7 @@ def main() -> None:
     def dirs_on_disk() -> int:
         return len(
             [d for d in fmt.fs.list_subdirs(fmt.path("raw.docs"))
-             if d.startswith(("d-", "cdc-", "dvk-"))]
+             if d.startswith(("d-", "cdc-", "dvp-"))]
         )
 
     metrics = []
