@@ -255,6 +255,27 @@ class HadoopFS:
             return 0.0
         return fs.getFileStatus(p).getModificationTime() / 1000.0
 
+    def tree_files(self, uri: str) -> list[str]:
+        """Paths, relative to ``uri``, of every plain file under it
+        (sorted; empty for an absent path)."""
+        lp = self._local_path(uri)
+        if lp is not None:
+            return sorted(
+                os.path.relpath(os.path.join(root, f), lp)
+                for root, _dirs, files in os.walk(lp)
+                for f in files
+            )
+        p = self._jpath(uri)
+        fs = self._fs(p)
+        if not fs.exists(p):
+            return []
+        base = len(fs.getFileStatus(p).getPath().toUri().getPath().rstrip("/"))
+        it = fs.listFiles(p, True)
+        out = []
+        while it.hasNext():
+            out.append(it.next().getPath().toUri().getPath()[base + 1:])
+        return sorted(out)
+
     def tree_bytes(self, uri: str) -> int:
         """Total bytes under ``uri`` via ``getContentSummary`` — one
         filesystem call for the whole tree (HDFS answers from the

@@ -14,7 +14,7 @@ step a delta."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.flatten import flatten_document_table
@@ -70,8 +70,10 @@ def root_key_merge(wh: Warehouse, collection: str, tables: dict) -> None:
     """
     import contextlib
 
-    parent_keys = (
-        tables[collection].select(F.col("_dlt_id").alias("_dlt_root_id")).distinct()
+    # no distinct(): the merges only semi/anti-join the delete set,
+    # and those joins ignore duplicate keys
+    parent_keys = tables[collection].select(
+        F.col("_dlt_id").alias("_dlt_root_id")
     )
     # dlt's inferred-schema evolution (r15): a drifted batch
     # widens/variants instead of refusing; parent and children
@@ -238,26 +240,35 @@ class HealthPipeline:
         )
         lv = cursor.last_value()
         # localCheckpoint = the batch SNAPSHOT: every flattened
-        # table's upsert and the cursor commit read ONE materialized
-        # extract instead of re-scanning the live source per action
-        # (3+ scans per collection otherwise) — and, like dlt's
-        # cursor protocol, the committed watermark is derived from
-        # the rows actually loaded, so a source file rewritten
-        # mid-sync cannot advance the cursor past unloaded documents.
+        # table's upsert reads ONE materialized extract instead of
+        # re-scanning the live source per action (3+ scans per
+        # collection otherwise).  The same pass observes the batch's
+        # max cursor value and row count, so the cursor commit, the
+        # rollup batch id and the run-log count cost no job — and,
+        # like dlt's cursor protocol, the committed watermark is
+        # derived from the rows actually loaded, so a source file
+        # rewritten mid-sync cannot advance the cursor past unloaded
+        # documents.
+        obs = Observation()
         fresh = dedup_by_pk(
             cursor.filter(docs, lv=lv), pk="_id"
+        ).observe(
+            obs,
+            F.max(cursor.cursor_field).alias("mx"),
+            F.count(F.lit(1)).alias("n"),
         ).localCheckpoint()
+        batch_max = obs.get["mx"]
         tables = flatten_document_table(fresh, coll, primary_key="_id")
         root_key_merge(wh, coll, tables)
         if self.steps_rollup is not None and coll == "steps":
             # BEFORE the cursor commit: a crash between rollup merge and
             # commit retries the whole batch, and the rollup's batch-id
             # cursor makes the re-merge a no-op (see _sync_steps_rollup)
-            self._sync_steps_rollup(tables, lv)
-        cursor.commit(fresh)
-        return fresh.count() if want_count else None
+            self._sync_steps_rollup(tables, lv, batch_max)
+        cursor.commit(batch_max)
+        return obs.get["n"] if want_count else None
 
-    def _sync_steps_rollup(self, tables: dict, lv) -> None:
+    def _sync_steps_rollup(self, tables: dict, lv, batch_max) -> None:
         """Continuous-aggregate refresh riding the sync cadence: the
         strictly-new slice of this batch's flattened steps tables is
         stage-transformed and MERGED into the stored daily rollup.
@@ -267,7 +278,11 @@ class HealthPipeline:
         previous sync).  Exactly-once across sync RETRIES: the batch's
         max raw ``created_at`` is a monotone batch id committed
         atomically with the merged data — a retried batch
-        re-delivering the SAME rows carries the same id and no-ops.  A
+        re-delivering the SAME rows carries the same id and no-ops.
+        ``batch_max`` is that id, observed by the caller on the pass
+        that materialized the batch: it is the id of the strictly-new
+        slice when it exceeds both ``lv`` and the committed id, and
+        otherwise the batch holds nothing new.  A
         retry is NOT guaranteed byte-identical, though: a crash between
         the rollup merge and the cursor commit re-extracts the batch,
         and newly arrived docs raise max(created_at) so the id check
@@ -284,19 +299,16 @@ class HealthPipeline:
         parent, child = tables.get("steps"), tables.get("steps__metrics")
         if parent is None or child is None:
             return
-        if lv is not None:
-            parent = parent.filter(F.col("created_at") > F.lit(lv))
         meta = self.steps_rollup._meta_state()
-        applied = meta[0]
-        if applied is not None:
-            parent = parent.filter(F.col("created_at") > F.lit(applied))
-        batch_id = parent.agg(F.max("created_at").alias("m")).first()["m"]
-        if batch_id is None:
+        floors = [b for b in (lv, meta[0]) if b is not None]
+        if batch_max is None or any(batch_max <= b for b in floors):
             return  # boundary-only re-read: nothing strictly new
+        for b in floors:
+            parent = parent.filter(F.col("created_at") > F.lit(b))
         delta = STAGE_MODELS["stage.steps"][0](
             {"steps": parent, "steps__metrics": child}
         )
-        self.steps_rollup.sync(delta, batch_id=int(batch_id), _meta=meta)
+        self.steps_rollup.sync(delta, batch_id=int(batch_max), _meta=meta)
 
     def daily_steps_rollup(self) -> DataFrame:
         """``agg.daily_steps`` served from the MAINTAINED rollup — same
@@ -957,10 +969,10 @@ class _RollupSyncBase:
                 *self.group_cols,
                 *[self._merge_metric(m) for m in self._metrics],
             )
-        # the stats-bounded merge evaluates its source ~3x (key-range
-        # agg, match probe, final write); delta is a derived agg+join
-        # bounded by TOUCHED GROUPS, so one materialization beats three
-        # recomputes at any scale (r15 optimization round).  The try
+        # the stats-bounded merge evaluates its source twice (the
+        # materialized key pass, the final write); delta is a derived
+        # agg+join bounded by TOUCHED GROUPS, so one materialization
+        # beats two recomputes at any scale (r15 optimization round).  The try
         # begins HERE (ADVICE r15 #1): the watermark-type refusal and
         # the batch-watermark aggregate below must not leak the cache
         # registration.

@@ -575,12 +575,8 @@ class ParquetFormat(TableFormat):
         #
         # Schema memo (r16, VERDICT r15 task 3): unlike manifest data
         # dirs this table dir is MUTABLE (staging swap, appends), so
-        # the memo key embeds the commit marker's mtime — every
-        # committed Spark write (append, overwrite, swapped-in staging
-        # dir) lands a fresh ``_SUCCESS``, so any committed change
-        # mints a NEW key and re-infers; only byte-identical committed
-        # states reuse a cached schema.  The root mtime additionally
-        # covers direct child add/remove (the two-phase rename).
+        # the memo key is derived from the committed file set — see
+        # ``_schema_memo_key``.
         self.recover(name)
         path = self.path(name)
         key = self._schema_memo_key(path)
@@ -597,12 +593,23 @@ class ParquetFormat(TableFormat):
         """Memo key for this table's CURRENT committed state, or None
         when the state is not attributable (no commit marker — e.g. a
         raw dir not written by Spark): then every read re-infers,
-        exactly the pre-memo behavior."""
+        exactly the pre-memo behavior.
+
+        The key digests the names of every file under the table.  Each
+        committed Spark write (append, overwrite, swapped-in staging
+        dir, partition drop) adds or removes files, and a write's data
+        files carry its job's fresh uuid, so any committed change mints
+        a new key — also when two commits fall inside one mtime tick,
+        which the commit marker's mtime cannot tell apart.  The listing
+        is metadata only, the same one the read itself makes."""
+        import hashlib
+
         try:
-            marker = join_uri(path, "_SUCCESS")
-            if not self.fs.exists(marker):
+            names = self.fs.tree_files(path)
+            if "_SUCCESS" not in names:
                 return None
-            return (path, self.fs.mtime(marker), self.fs.mtime(path))
+            digest = hashlib.sha1("\n".join(names).encode()).hexdigest()
+            return (path, digest)
         except Exception:
             return None
 
@@ -877,10 +884,12 @@ class ManifestFormat(TableFormat):
         ``cdf``: record ROW-LEVEL change data on every DML commit
         (delete/update/merge) so :meth:`read_changes_cdf` can serve
         retraction-aware consumers across rewrites.  OPT-IN, matching
-        Delta's ``enableChangeDataFeed`` default: the classification
-        joins + change-row landing roughly double a merge's job count
-        (measured +0.6 s on the sf0.1 time-travel cycle), and a table
-        nobody tails must not pay that per 15-minute sync.  With it
+        Delta's ``enableChangeDataFeed`` default: the change rows are
+        one more landing per DML commit — a DELETE or UPDATE takes its
+        row count from that landing, but a MERGE pays one windowed
+        classification shuffle and the landing, about 3 more jobs than
+        the 5 of a matched merge without it — and a table nobody tails
+        must not pay that per 15-minute sync.  With it
         off, DML commits record no change rows and the CDF read
         refuses across them with a resync error naming this flag; the
         append-only :meth:`read_changes` feed is unaffected.  The flag
@@ -4391,7 +4400,7 @@ class ManifestFormat(TableFormat):
             cdc = self._land_cdc(
                 name,
                 df.limit(0).withColumn("_change_type", F.lit("purge")),
-                0, "purge", m["version"],
+                "purge", m["version"],
             )
         else:
             provenance = sorted(
@@ -4480,9 +4489,7 @@ class ManifestFormat(TableFormat):
             )
         return entries
 
-    def _land_cdc(
-        self, name: str, changed, n: int | None, op: str, since: int
-    ) -> dict:
+    def _land_cdc(self, name: str, changed, op: str, since: int) -> dict:
         """Land a rewrite's row-level change data in a ``cdc-*`` dir
         (Delta CDF's ``_change_data``), BEFORE the CAS like every data
         dir — an orphan from a lost race is vacuum-swept with the same
@@ -4506,23 +4513,22 @@ class ManifestFormat(TableFormat):
         if not self.cdf:
             return None
 
-        dirname = f"cdc-{uuid.uuid4().hex}"
-        if n is None:
-            # the recorded count rides the landing itself (Observation,
-            # r13 — previously a separate footer-count job per merge)
-            from pyspark.sql import Observation
-            from pyspark.sql import functions as F
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
 
-            obs = Observation()
-            changed.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-                "overwrite"
-            ).parquet(join_uri(self.path(name), dirname))
-            n = obs.get["n"]
-        else:
-            changed.write.mode("overwrite").parquet(
-                join_uri(self.path(name), dirname)
-            )
-        return {"dir": dirname, "n": int(n), "op": op, "since": int(since)}
+        dirname = f"cdc-{uuid.uuid4().hex}"
+        # the recorded count rides the landing itself (Observation).
+        # It counts changed ROWS: a postimage pairs with its preimage,
+        # so an UPDATE of k rows records k, like a DELETE of k rows
+        obs = Observation()
+        changed.observe(
+            obs,
+            F.count_if(F.col("_change_type") != "update_postimage").alias("n"),
+        ).write.mode("overwrite").parquet(join_uri(self.path(name), dirname))
+        return {
+            "dir": dirname, "n": int(obs.get["n"]), "op": op,
+            "since": int(since),
+        }
 
     def read_changes_cdf(
         self, name: str, since_version: int, to_version: int | None = None
@@ -5200,7 +5206,7 @@ class ManifestFormat(TableFormat):
             name,
             matched.drop("__dv_file", "__dv_pos")
             .withColumn("_change_type", F.lit("delete")),
-            n_deleted, "delete", m["version"],
+            "delete", m["version"],
         )
         dv = (m.get("dv") or []) + [entry]
         self._commit(
@@ -5277,7 +5283,7 @@ class ManifestFormat(TableFormat):
         cdc = self._land_cdc(
             name,
             clean.limit(0).withColumn("_change_type", F.lit("purge")),
-            0, "purge", m["version"],
+            "purge", m["version"],
         )
         affected_keys = {self._entry_key(e) for e in affected}
         self._commit(
@@ -5320,7 +5326,12 @@ class ManifestFormat(TableFormat):
         Change feed: the rewrite removes history without compaction
         provenance, so ``read_changes`` across it REFUSES with the
         documented resync error — correct, deletes are not appends.
-        Returns the number of rows deleted."""
+        Returns the number of rows deleted.  On a ``cdf`` table that
+        count rides the change-row landing (Observation), so the
+        delete is two jobs: the change rows, then the survivors.
+        Without CDF a count job precedes the rewrite: fusing it into
+        the rewrite would land a full candidate rewrite even when no
+        row matches."""
         from pyspark.sql import functions as F
 
         bounds = col if isinstance(col, dict) else {col: (lo, hi)}
@@ -5341,14 +5352,16 @@ class ManifestFormat(TableFormat):
         # not be re-counted, and must NOT resurrect in the rewrite
         cand_df = self._read_with_dv(name, m, candidates)
         cond = F.coalesce(self._bounds_condition(bounds), F.lit(False))
-        n_deleted = cand_df.filter(cond).count()
-        if n_deleted == 0:
-            return 0  # candidates intersected by range, no actual rows
-        survivors = cand_df.filter(~cond)
         cdc = self._land_cdc(
             name, cand_df.filter(cond).withColumn("_change_type", F.lit("delete")),
-            n_deleted, "delete", m["version"],
+            "delete", m["version"],
         )
+        n_deleted = cdc["n"] if cdc else cand_df.filter(cond).count()
+        if n_deleted == 0:
+            # candidates intersected by range, no actual rows
+            self._drop_empty_cdc(name, cdc)
+            return 0
+        survivors = cand_df.filter(~cond)
         cols = tuple(m["partition_columns"])
         new, _ = self._new_data_dir(name, survivors, cols)
         # txn carried from the base: a row-level DELETE must not reset
@@ -5436,7 +5449,9 @@ class ManifestFormat(TableFormat):
 
         Scale shape: on a clustered table a narrow update rewrites
         ~one file.  Note the rewritten entries' stats are recomputed
-        from the NEW values, so later skipping stays sound."""
+        from the NEW values, so later skipping stays sound.  The count
+        is taken like :meth:`delete_where`'s: from the change-row
+        landing on a ``cdf`` table, from a count job otherwise."""
         from pyspark.sql import functions as F
 
         bounds = col if isinstance(col, dict) else {col: (lo, hi)}
@@ -5454,9 +5469,6 @@ class ManifestFormat(TableFormat):
         cand_df = self._read_with_dv(name, m, candidates)
         self._validate_set_exprs(name, cand_df, set_exprs, "update_where")
         cond = F.coalesce(self._bounds_condition(bounds), F.lit(False))
-        n_updated = cand_df.filter(cond).count()
-        if n_updated == 0:
-            return 0
         rewritten = cand_df.select(
             *[
                 (
@@ -5490,7 +5502,11 @@ class ManifestFormat(TableFormat):
         ).unionByName(
             postimage.withColumn("_change_type", F.lit("update_postimage"))
         )
-        cdc = self._land_cdc(name, changed, n_updated, "update", m["version"])
+        cdc = self._land_cdc(name, changed, "update", m["version"])
+        n_updated = cdc["n"] if cdc else matched.count()
+        if n_updated == 0:
+            self._drop_empty_cdc(name, cdc)
+            return 0
         cols = tuple(m["partition_columns"])
         new, _ = self._new_data_dir(name, rewritten, cols)
         if new:
@@ -5561,8 +5577,9 @@ class ManifestFormat(TableFormat):
         __init__.py:61-67, models/stage/users.sql:2-5), so at 100 TB a
         full rewrite per micro-batch is THE scale-killer.
 
-        Plan: the batch's key range [min, max] is two scalars (one
-        bounded agg); entries whose ``unique_key`` min/max stats prove
+        Plan: the batch's key range [min, max] is two scalars,
+        observed on the one pass that materializes the batch's key
+        column (``_merge_front``); entries whose ``unique_key`` min/max stats prove
         NO batch key can fall inside carry over BY IDENTITY — on a
         key-clustered table a micro-batch rewrites ~the files its keys
         live in, never the table.  May-match entries re-read, rows
@@ -5653,7 +5670,17 @@ class ManifestFormat(TableFormat):
         returns ``(m, keys, candidates, cand_df, matched, key_reads,
         merged_schema)`` for the caller's write half; ``matched`` is
         persisted when ``persist`` (the caller unpersists it), and
-        ``with_pos`` reads the candidates with their row identity."""
+        ``with_pos`` reads the candidates with their row identity.
+
+        The batch's key column is materialized ONCE (one job), and
+        that pass observes the key range and count: the range prunes
+        the candidates, the count answers "is the batch empty", and
+        the match probe, the rewrite's anti-join, the MOR mask and the
+        CDC classes all join the one materialized key set.  It keeps
+        duplicates (semi and anti joins ignore them), and it carries
+        size statistics, so the planner broadcasts it when it is
+        small and shuffles it when it is not."""
+        from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
         prev = self._manifest(name)
@@ -5664,13 +5691,14 @@ class ManifestFormat(TableFormat):
             self.replace_atomic(name, df, (), txn=txn_update)
             return None
         key_src = delete_keys if delete_keys is not None else df
-        keys = key_src.select(unique_key).distinct()
-        # min/max are distinct-insensitive: aggregate the raw key column
-        # so the range probe skips the dedup exchange (r15 optimization)
-        row = key_src.select(unique_key).agg(
-            F.min(unique_key).alias("mn"), F.max(unique_key).alias("mx")
-        ).first()
-        lo, hi = row["mn"], row["mx"]
+        obs = Observation()
+        keys = key_src.select(unique_key).observe(
+            obs,
+            F.min(unique_key).alias("mn"),
+            F.max(unique_key).alias("mx"),
+            F.count(F.lit(1)).alias("n"),
+        ).localCheckpoint()
+        lo, hi = obs.get["mn"], obs.get["mx"]
         # prune against the ALREADY-READ head (one manifest resolve per
         # merge — this is the 15-minute hot path — and no TOCTOU window
         # between the emptiness check and the pruned snapshot); stats
@@ -5707,7 +5735,7 @@ class ManifestFormat(TableFormat):
         if not has_match:
             if matched is not None and persist:
                 matched.unpersist()
-            if df.isEmpty():
+            if obs.get["n"] == 0 if key_src is df else df.isEmpty():
                 # delete-only merge with nothing to delete: no data
                 # commit, but a cursor advance still lands (metadata
                 # only) — an empty delta must not stall its writer
@@ -5752,45 +5780,42 @@ class ManifestFormat(TableFormat):
         self, name: str, df: DataFrame, matched: DataFrame,
         unique_key: str, base_version: int,
     ) -> dict | None:
-        """Fused merge CDC classification (VERDICT r10 task 8): ONE
-        key-class map instead of four semi/anti row-frame joins — the
-        batch and matched KEY sets (tiny, batch-bounded) full-outer
-        into a per-key membership pair, each row frame tags its class
-        through a single hash join, and the recorded change count
-        comes from the landed cdc footers instead of a separate
-        ``df.count()`` job.  Candidate files are scanned once when the
-        caller persisted ``matched``.  Shared by the copy-on-write and
-        merge-on-read MERGE forms (identical classes either way: the
-        physical plan differs, the logical change does not)."""
+        """Merge CDC classification in ONE shuffle: the matched rows
+        (preimages) and the batch rows (postimages) are unioned and
+        windowed by key, and each row's class follows from whether its
+        key has rows on the other side — a matched key present in the
+        batch emits update_preimage/update_postimage, a matched key
+        absent from the batch (a root-key delete) emits delete, an
+        unmatched batch row emits insert.  The recorded change count
+        rides the landing (``_land_cdc``).  Shared by the copy-on-write
+        and merge-on-read MERGE forms (identical classes either way:
+        the physical plan differs, the logical change does not)."""
+        from pyspark.sql import Window
         from pyspark.sql import functions as F
 
-        df_keys = df.select(unique_key).distinct().withColumn(
-            "__in_batch", F.lit(True)
-        )
-        matched_keys = matched.select(unique_key).distinct().withColumn(
-            "__in_matched", F.lit(True)
-        )
-        key_class = df_keys.join(
-            matched_keys, unique_key, "full_outer"
-        ).select(
-            unique_key,
-            F.coalesce("__in_batch", F.lit(False)).alias("__in_batch"),
-            F.coalesce("__in_matched", F.lit(False)).alias("__in_matched"),
-        )
-        pre = matched.join(key_class, unique_key).withColumn(
+        pre = F.col("__pre")
+        w = Window.partitionBy(unique_key)
+        changed = matched.withColumn("__pre", F.lit(True)).unionByName(
+            df.withColumn("__pre", F.lit(False)), allowMissingColumns=True
+        ).withColumn(
             "_change_type",
             F.when(
-                F.col("__in_batch"), F.lit("update_preimage")
-            ).otherwise(F.lit("delete")),
-        ).drop("__in_batch", "__in_matched")
-        post = df.join(key_class, unique_key).withColumn(
-            "_change_type",
-            F.when(
-                F.col("__in_matched"), F.lit("update_postimage")
-            ).otherwise(F.lit("insert")),
-        ).drop("__in_batch", "__in_matched")
-        changed = pre.unionByName(post, allowMissingColumns=True)
-        return self._land_cdc(name, changed, None, "merge", base_version)
+                pre,
+                F.when(F.min(pre).over(w), F.lit("delete")).otherwise(
+                    F.lit("update_preimage")
+                ),
+            ).otherwise(
+                F.when(F.max(pre).over(w), F.lit("update_postimage"))
+                .otherwise(F.lit("insert"))
+            ),
+        ).drop("__pre")
+        return self._land_cdc(name, changed, "merge", base_version)
+
+    def _drop_empty_cdc(self, name: str, cdc: dict | None) -> None:
+        """Remove a change-row landing whose DML matched no row: the
+        verb commits nothing, so the dir would only wait for vacuum."""
+        if cdc:
+            self.fs.delete(join_uri(self.path(name), cdc["dir"]))
 
     def _land_dv_pos(
         self, name: str, matched: DataFrame, candidates: list
@@ -6008,9 +6033,7 @@ class ManifestFormat(TableFormat):
                     "_change_type", F.lit("update_postimage")
                 )
             )
-            cdc = self._land_cdc(
-                name, changed, n_updated, "update", m["version"]
-            )
+            cdc = self._land_cdc(name, changed, "update", m["version"])
         cols = tuple(m["partition_columns"])
         new, _ = self._new_data_dir(name, postimage, cols)
         if new:

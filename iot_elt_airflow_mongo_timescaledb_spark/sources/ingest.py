@@ -10,11 +10,16 @@ Reimplements the reference's extract path Spark-natively:
 
 The cursor protocol is the reference's exactly: re-extract everything
 with ``cursor_field >= last_value`` (dup-tolerant), dedup by primary
-key downstream, then persist the new max.  State lives in a tiny
-parquet "_meta" table — the only driver-side scalar in the pipeline.
+key downstream, then persist the new max.  The new max is observed on
+the pass that materializes the batch, and the state is a small JSON
+file read and written through the Hadoop FileSystem: the cursor costs
+no Spark job.
 """
 
 from __future__ import annotations
+
+import datetime
+import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,64 +65,96 @@ class IncrementalCursor:
     ``filter()`` applies the reference's ``{cursor_field: {"$gte":
     last_value}}`` predicate (helpers.py:93-96): *inclusive* lower bound,
     so boundary docs re-read and pk-dedup cleans up.  ``commit()``
-    persists the new max after a successful load.
-    """
+    persists the new max after a successful load; the caller observes
+    that max on a pass it already makes (``HealthPipeline._sync_one``).
+
+    The state is ``_meta_cursor_<source>.json``, one ``{"type",
+    "value"}`` object for a long, timestamp or string cursor.  The
+    parquet ``_meta_cursor_<source>`` directory that earlier builds
+    wrote is not read: the first sync after the upgrade re-extracts
+    the source once, which converges (raw merges on ``_dlt_id``, a
+    hash of the primary key, and the steps rollup skips rows at or
+    below its committed batch id)."""
+
+    #: JSON state codecs per cursor type: (python type, encode, decode)
+    _CODECS = {
+        "long": (int, int, int),
+        "timestamp": (
+            datetime.datetime,
+            datetime.datetime.isoformat,
+            datetime.datetime.fromisoformat,
+        ),
+        "string": (str, str, str),
+    }
 
     def __init__(self, spark: SparkSession, state_dir: str, source: str, cursor_field: str):
         from ..fs import HadoopFS, join_uri
 
         self.spark = spark
-        self.state_path = join_uri(state_dir, f"_meta_cursor_{source}")
+        self.state_path = join_uri(state_dir, f"_meta_cursor_{source}.json")
         self.cursor_field = cursor_field
         self._fs = HadoopFS(spark)
 
     def last_value(self):
-        # missing state == first run; anything ELSE (corrupt half-written
-        # file, permission error) must raise — treating it as a first run
-        # would silently re-extract the entire source history.  Existence
-        # goes through the Hadoop FileSystem (fs.py), NEVER os.path: on
-        # the scheme-qualified warehouse roots the rest of the repo
-        # supports (hdfs://, s3a://), os.path answers "missing" for a
-        # POPULATED cursor, and the sync would silently re-extract full
-        # source history — correct (pk-dedup) but a full-history rescan
-        # per cadence at 100 TB.
+        # missing state == first run; anything ELSE (a torn or
+        # hand-edited file, permission error) must raise — treating it
+        # as a first run would silently re-extract the entire source
+        # history.  Existence goes through the Hadoop FileSystem
+        # (fs.py), NEVER os.path: on the scheme-qualified warehouse
+        # roots the rest of the repo supports (hdfs://, s3a://),
+        # os.path answers "missing" for a POPULATED cursor.
         if not self._fs.exists(self.state_path):
             return None
-        rows = self.spark.read.parquet(self.state_path).collect()
-        return rows[0]["last_value"] if rows else None
+        text = self._fs.read_text(self.state_path)
+        try:
+            state = json.loads(text)
+            return self._CODECS[state["type"]][2](state["value"])
+        except (ValueError, KeyError, TypeError) as e:
+            raise ValueError(
+                f"cursor state {self.state_path} is unreadable "
+                f"({text[:80]!r}); restore it or delete it to re-extract "
+                "the source"
+            ) from e
 
     _UNSET = object()
 
     def filter(self, df: DataFrame, lv=_UNSET) -> DataFrame:
         """``lv`` lets a caller that already fetched :meth:`last_value`
-        this batch skip the re-read (one cursor-state job per sync;
-        r16 optimization round).  ``None`` is a meaningful value
-        (first run), hence the sentinel default."""
+        this batch skip the re-read (one cursor-state read per sync).
+        ``None`` is a meaningful value (first run), hence the sentinel
+        default."""
         if lv is self._UNSET:
             lv = self.last_value()
         if lv is None:
             return df
         return df.filter(F.col(self.cursor_field) >= F.lit(lv))
 
-    def commit(self, df: DataFrame) -> None:
-        from pyspark.sql import types as T
-
-        from ..session import local_rows
-
-        row = df.agg(F.max(self.cursor_field).alias("last_value")).first()
-        if row["last_value"] is None:
+    def commit(self, value) -> None:
+        """Persist ``value``, the loaded batch's max of the cursor
+        field (``None`` — an empty batch — keeps the stored state).  A
+        type without a JSON codec refuses here, before anything is
+        written."""
+        if value is None:
             return
-        # single-slice local frame: the coalesce(1) form serialized 32
-        # empty Python partitions into one task (~5 s per sync at
-        # local[32]; r15 optimization round).  Explicit schema from the
-        # source frame's own cursor type: the column-name form ran an
-        # extra rdd sampling job per commit to infer it (ADVICE r15 #3)
-        schema = T.StructType(
-            [T.StructField("last_value", df.schema[self.cursor_field].dataType)]
+        kind = next(
+            (
+                k
+                for k, (t, _, _) in self._CODECS.items()
+                if type(value) is t
+            ),
+            None,
         )
-        local_rows(self.spark, [(row["last_value"],)], schema).write.mode(
-            "overwrite"
-        ).parquet(self.state_path)
+        if kind is None:
+            raise TypeError(
+                f"cursor {self.cursor_field!r}: cannot store a "
+                f"{type(value).__name__} value; supported cursor types "
+                f"are {sorted(self._CODECS)}"
+            )
+        self._fs.write_text(
+            self.state_path,
+            json.dumps({"type": kind, "value": self._CODECS[kind][1](value)}),
+            overwrite=True,
+        )
 
 
 def reconcile_schema_drift(wh, table_name: str, df: DataFrame) -> DataFrame:

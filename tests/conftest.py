@@ -74,6 +74,25 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(pytest.mark.slow)
 
 
+def jobs_in(spark, fn):
+    """``(fn(), Spark job ids started while fn runs)``, attributed by
+    a job group set on this thread.  The group name is fresh per call:
+    the tracker keeps finished jobs, and a reused name (``id(fn)`` of
+    a collected lambda can recur) would count an earlier call's jobs
+    too."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-in-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count probe")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     from iot_elt_airflow_mongo_timescaledb_spark.session import get_spark

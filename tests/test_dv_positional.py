@@ -22,6 +22,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from conftest import jobs_in
 from pyspark.sql import Row
 
 from iot_elt_airflow_mongo_timescaledb_spark.plans.table_format import (
@@ -236,24 +237,6 @@ def test_retired_dv_forms_refuse_in_batch_and_stream(spark, tmp_path, form):
         log.steps(0, log.head_version())
 
 
-def _jobs_in(spark, fn):
-    """(result, Spark job ids started while ``fn`` runs), attributed
-    by a job group set on this thread.  The group name is fresh per
-    call: the tracker keeps finished jobs, so a reused name would
-    count an earlier call's jobs too."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"mor-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "mor verb")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_mor_write_and_masked_read_job_counts(spark, tmp_path):
     """Without CDF a MOR delete is ONE job (the mask write observes the
     count and the masked files), an update TWO (mask, then postimage;
@@ -261,15 +244,15 @@ def test_mor_write_and_masked_read_job_counts(spark, tmp_path):
     most three (the masks' schema is declared, never inferred)."""
     fmt = _fmt(spark, str(tmp_path), cdf=False)
     _seed(spark, fmt)
-    n, jobs = _jobs_in(spark, lambda: fmt.delete_where_mor("s.t", "k", 21, 24))
+    n, jobs = jobs_in(spark, lambda: fmt.delete_where_mor("s.t", "k", 21, 24))
     assert n == 4 and len(jobs) <= 1, jobs
-    n, jobs = _jobs_in(
+    n, jobs = jobs_in(
         spark,
         lambda: fmt.update_where_mor("s.t", "k", {"v": "v + 1"}, 30, 32),
     )
     assert n == 3 and len(jobs) <= 2, jobs
     assert len(fmt._manifest("s.t")["dv"]) == 2
-    rows, jobs = _jobs_in(spark, lambda: fmt.read("s.t").collect())
+    rows, jobs = jobs_in(spark, lambda: fmt.read("s.t").collect())
     assert len(jobs) <= 3, jobs
     got = {r["k"]: r["v"] for r in rows}
     assert len(rows) == len(got) == 46

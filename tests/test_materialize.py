@@ -726,7 +726,7 @@ def test_incremental_cursor_on_scheme_qualified_uri(spark, tmp_path):
     assert cur.last_value() is None  # genuinely-first run
     df = spark.createDataFrame([(1, 10), (2, 20)], "pk long, ts long")
     assert cur.filter(df).count() == 2
-    cur.commit(df)
+    cur.commit(20)
 
     # reopen: the populated state must be FOUND through the scheme
     cur2 = IncrementalCursor(spark, root, "events", "ts")

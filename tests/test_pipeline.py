@@ -604,7 +604,7 @@ def test_maintained_rollup_retry_with_new_arrivals_no_double_count(
     )
     orig_commit = IncrementalCursor.commit
 
-    def crashing(self, df):
+    def crashing(self, value):
         raise RuntimeError("simulated crash before cursor commit")
 
     monkeypatch.setattr(IncrementalCursor, "commit", crashing)

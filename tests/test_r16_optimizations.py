@@ -23,6 +23,7 @@ Pins the cross-cutting changes of optimization round 2:
 from __future__ import annotations
 
 import pytest
+from conftest import jobs_in
 from pyspark.sql import functions as F
 
 from iot_elt_airflow_mongo_timescaledb_spark.plans import table_format
@@ -143,24 +144,6 @@ def _cdf_batch(spark, rows, version):
     )
 
 
-def _jobs_in(spark, fn):
-    """Spark job ids started while ``fn`` runs, attributed by a job
-    group set on this thread.  The group name is fresh per call: the
-    tracker keeps finished jobs, and ``id(fn)`` of a collected lambda
-    can recur, which would count an earlier call's jobs too."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"cursor-probe-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "cursor read")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_manifest_rollup_cursor_zero_jobs_and_foreign_commits(
     spark, tmp_path
 ):
@@ -198,9 +181,9 @@ def test_manifest_rollup_cursor_zero_jobs_and_foreign_commits(
             inst.materialized_watermark(),
         )
 
-    cold, jobs = _jobs_in(spark, lambda: cursor(rollup()))
+    cold, jobs = jobs_in(spark, lambda: cursor(rollup()))
     assert cold == ((1, "d1"), 1, "d1") and jobs == []
-    warm, jobs = _jobs_in(spark, lambda: cursor(agg))
+    warm, jobs = jobs_in(spark, lambda: cursor(agg))
     assert warm == cold and jobs == []
     state = fmt.read("agg.s")
     assert "__last_batch_id" not in state.columns
